@@ -21,7 +21,7 @@ relaxation needs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from graph_database_spark.operators.fixpoint import fixpoint, materialize
 from graph_database_spark.plans.copurchase import symmetrize
@@ -37,10 +37,13 @@ def bfs_distances(
     without a caller-supplied root). Raises if the graph's eccentricity
     exceeds ``max_iterations`` (a silently partial distance map is a
     wrong one)."""
-    sym = materialize(symmetrize(edges))
+    # The default source is read off the symmetrized checkpoint as an
+    # observe() metric, so it costs no job of its own.
+    lowest = Observation()
+    sym = materialize(symmetrize(edges).observe(lowest, F.min("v").alias("v")))
     verts = sym.select(F.col("v").alias("id")).distinct()
     if source is None:
-        source = verts.agg(F.min("id")).first()[0]
+        source = lowest.get["v"]
 
     init = verts.select(
         "id",

@@ -74,7 +74,7 @@ def fixpoint(
     fuse: int = 1,
     probe: Column | None = None,
     probe_done: Callable[[object, object], bool] | None = None,
-    probe_init: Callable[[DataFrame], object] | None = None,
+    probe_seed: bool = False,
 ) -> DataFrame:
     """Iterate ``state = step(state)`` until ``converged(old, new)``.
 
@@ -116,8 +116,9 @@ def fixpoint(
     When given, ``converged`` is ignored (pass None); the round is
     converged when ``probe_done(prev_value, value)`` is True (default:
     value is 0 or NULL — the "no row changed" rule every != prev probe
-    reduces to). ``probe_init`` seeds prev_value from the materialized
-    initial state (count-stability probes need the starting count);
+    reduces to). ``probe_seed`` also observes ``probe`` on the initial
+    state's checkpoint and seeds prev_value with it (count-stability
+    probes need the starting count; reading it there costs no job);
     prev_value otherwise starts as None. Per round this removes one
     scheduled job — at 1000 executors one full cluster barrier — and
     at sf0.1 the ~0.1 s fixed probe-job cost (SCALE.md r13 floor
@@ -126,10 +127,15 @@ def fixpoint(
     from pyspark.sql import Observation
 
     parts = state_partitions(initial.sparkSession)
-    state = materialize(initial, parts)
+    prev_val = None
+    if probe_seed:
+        seed = Observation()
+        state = materialize(initial.observe(seed, probe.alias("p")), parts)
+        prev_val = seed.get["p"]
+    else:
+        state = materialize(initial, parts)
     if reset_stats:
         state = reset_plan_stats(state)
-    prev_val = probe_init(state) if probe_init is not None else None
     for i in range(max_iterations):
         s = state
         for _ in range(fuse):

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from graph_database_spark.plans.copurchase import symmetrize
 
@@ -145,6 +145,16 @@ def degree(edges: DataFrame) -> DataFrame:
     )
 
 
+def _hub_probe(edges: DataFrame) -> tuple[DataFrame, int]:
+    """``(deg, grid_blocks)``: the checkpointed degree frame and the
+    wedge grid width its max degree selects (``_grid_blocks_for``). The
+    max rides the checkpoint job as an ``observe`` metric, so the probe
+    fires no job beyond the checkpoint every caller reuses ``deg`` from."""
+    hub = Observation()
+    deg = degree(edges).observe(hub, F.max("degree").alias("m")).localCheckpoint()
+    return deg, _grid_blocks_for(hub.get["m"])
+
+
 def cooccurrence_pairs(vertices: DataFrame) -> DataFrame:
     """Proof-1 denominator: ordered vertex pairs (including self-pairs)
     whose (attr_a, attr_b) pair is equal and fully non-null.
@@ -219,14 +229,15 @@ def triangle_edges(edges: DataFrame, grid_blocks: int | None = None) -> DataFram
     no closed wedge get 0 via the left join with degree.
 
     Hub posture: the degree frame (checkpointed — it feeds the probe
-    and the final left join) is probed for max degree; past
+    and the final left join) is probed for max degree (``_hub_probe``,
+    an observe metric on that checkpoint); past
     _WEDGE_SALT_THRESHOLD the wedge self-join switches to the salted
     block-pair grid (_wedge_pairs), which AQE alone cannot provide for
     a self-join key. ``grid_blocks`` overrides the probe (tests).
     """
-    deg = degree(edges).localCheckpoint()
+    deg, probed = _hub_probe(edges)
     if grid_blocks is None:
-        grid_blocks = _grid_blocks_for(deg.agg(F.max("degree")).first()[0])
+        grid_blocks = probed
     wedges = _wedge_pairs(symmetrize(edges), grid_blocks)
     closed = wedges.join(
         edges, (F.col("n1") == F.col("src")) & (F.col("n2") == F.col("dst")), "left_semi"
@@ -288,8 +299,7 @@ def link_prediction(edges: DataFrame, min_common: int = 2, top_k: int = 100) -> 
     # deg feeds the hub probe and both scoring joins; the probe selects
     # the salted wedge grid past _WEDGE_SALT_THRESHOLD (AQE cannot
     # spread a self-join key).
-    deg = degree(edges).localCheckpoint()
-    blocks = _grid_blocks_for(deg.agg(F.max("degree")).first()[0])
+    deg, blocks = _hub_probe(edges)
     pairs = (
         _wedge_pairs(sym, blocks)
         .select(F.col("n1").alias("id_a"), F.col("n2").alias("id_b"))
@@ -335,8 +345,7 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     """
     edges = edges.select("src", "dst").localCheckpoint()
     sym = symmetrize(edges).localCheckpoint()
-    deg = degree(edges).localCheckpoint()
-    blocks = _grid_blocks_for(deg.agg(F.max("degree")).first()[0])
+    deg, blocks = _hub_probe(edges)
     pairs = (
         _wedge_pairs(sym, blocks)
         .groupBy("n1", "n2")
@@ -402,9 +411,7 @@ def rectangle_count(edges: DataFrame) -> DataFrame:
     """
     edges = edges.select("src", "dst").localCheckpoint()
     sym = symmetrize(edges).localCheckpoint()
-    blocks = _grid_blocks_for(
-        degree(edges).agg(F.max("degree")).first()[0]
-    )
+    _, blocks = _hub_probe(edges)
     codeg = (
         _wedge_pairs(sym, blocks)
         .groupBy("n1", "n2")
@@ -433,8 +440,7 @@ def link_scores(edges: DataFrame, min_common: int = 2, top_k: int = 100) -> Data
     edges = edges.select("src", "dst").localCheckpoint()
     # deg feeds the unit attachment, the hub probe, and both scoring
     # joins — checkpoint once (CLAUDE.md reuse rule).
-    deg = degree(edges).localCheckpoint()
-    blocks = _grid_blocks_for(deg.agg(F.max("degree")).first()[0])
+    deg, blocks = _hub_probe(edges)
     # Units attach to the wedge CENTER once, per vertex — never inside
     # the pair join (re-evaluation per wedge row) and never via a
     # post-join lookup (a third join). degree > 1 guard: a wedge center

@@ -44,8 +44,6 @@ def k_core(edges: DataFrame, k: int, max_iterations: int = 200) -> DataFrame:
     also the round where the dead set is derived before any peeling, so
     an engine-level pre-filter of low-degree vertices would bound it.)
     """
-    sym0 = materialize(symmetrize(edges))
-
     def degrees(sym_e: DataFrame) -> DataFrame:
         return sym_e.groupBy(F.col("v").alias("id")).agg(
             F.count("*").alias("degree")
@@ -58,14 +56,14 @@ def k_core(edges: DataFrame, k: int, max_iterations: int = 200) -> DataFrame:
         ).join(dead.withColumnRenamed("id", "n"), "n", "left_anti")
 
     # The edge set shrinks monotonically, so equal counts <=> no vertex
-    # was peeled this round <=> fixpoint; the count rides the checkpoint
-    # job as an observe() metric, seeded with one count of the initial
-    # edge frame.
+    # was peeled this round <=> fixpoint; the count rides every
+    # checkpoint job as an observe() metric, the initial edge frame's
+    # checkpoint included (probe_seed), so no round pays a count job.
     core_edges = fixpoint(
-        sym0, step, None, max_iterations, name="k_core",
+        symmetrize(edges), step, None, max_iterations, name="k_core",
         probe=F.count(F.lit(1)),
         probe_done=lambda prev, cur: prev is not None and cur == prev,
-        probe_init=lambda df: df.count(),
+        probe_seed=True,
     )
     return degrees(core_edges)
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graph_database_spark.operators.fixpoint import fixpoint, materialize
+from graph_database_spark.operators.fixpoint import fixpoint
 
 __all__ = ["k_truss"]
 
@@ -54,7 +54,6 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 100) -> DataFrame:
     (src < dst, unique)."""
     if k < 3:
         raise ValueError("k-truss is defined for k >= 3")
-    e0 = materialize(edges.select("src", "dst"))
 
     def step(e: DataFrame) -> DataFrame:
         sup = _support(e)
@@ -64,9 +63,9 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 100) -> DataFrame:
         return keep
 
     core = fixpoint(
-        e0, step, None, max_iterations, name="k_truss",
+        edges.select("src", "dst"), step, None, max_iterations, name="k_truss",
         probe=F.count(F.lit(1)),
         probe_done=lambda prev, cur: prev is not None and cur == prev,
-        probe_init=lambda df: df.count(),
+        probe_seed=True,
     )
     return _support(core)

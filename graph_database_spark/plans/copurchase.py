@@ -15,13 +15,15 @@ The same-month constraint keeps the graph sparse and realistic (avg degree
 ~15 at every sf, measured) — without it the co-purchase graph is >50% dense
 and neighborhood operators degenerate to O(V^3).
 
-Scale posture: the heavy step is the self-join of the deduped
-(customer, part, month) set on (part, month). Group sizes are bounded by
-customers-per-part-per-month (~5), so the pair explosion is linear in
-|lineitem| with a small constant, and the single shuffle key
-(part, month) has no skew. Edges are canonicalized src < dst at build time
-— the undirected-simple-graph invariant of the reference loader
-(src/main.js:224-239) — which halves all downstream shuffle volume.
+Scale posture: the heavy step is one aggregation of the (customer, part,
+month) rows on (part, month) into each context's sorted customer set;
+the in-context pairs a < b are then exploded from that array row by row,
+with no join. Group sizes are bounded by customers-per-part-per-month
+(~5), so the pair explosion is linear in |lineitem| with a small
+constant, and the single shuffle key (part, month) has no skew. Edges
+are canonicalized src < dst at build time — the undirected-simple-graph
+invariant of the reference loader (src/main.js:224-239) — which halves
+all downstream shuffle volume.
 """
 
 from __future__ import annotations
@@ -56,33 +58,51 @@ COPURCHASE_VERTICES_SQL = f"""
 """
 
 
-def copurchase_edges(spark, sf_dir: str) -> DataFrame:
-    """Canonical undirected edge set: ``(src BIGINT, dst BIGINT)``, src < dst.
+def _copurchase_pairs(spark, sf_dir: str) -> DataFrame:
+    """``(src, dst)`` once per shared (part, month) context: every
+    customer pair src < dst that ordered the same part in the same
+    calendar month.
 
-    One shuffle on (part, month) for the self-join, one for the final
-    distinct. Dedup happens *before* the pair join (distinct customer/part/
-    month) so the join input is minimal — the bulk-relational rewrite of the
-    reference's per-edge existence probe (src/main.js:224-239, J4 in
-    SURVEY.md §2.3).
-    """
+    One aggregation on (part, month) collects each context's distinct
+    customers as a sorted array; exploding that array twice and keeping
+    src < dst yields each in-context pair exactly once. NULL part or
+    month rows are dropped explicitly: the equi-join formulation (and
+    the oracle's) never matches them, but a groupBy would keep them as a
+    context of their own. NULL customers drop inside ``collect_set``,
+    as they fail the oracle's ``a.c < b.c``."""
     lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-
-    cp = (
+    contexts = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("c"),
             F.col("l_partkey").alias("p"),
             F.date_trunc("month", F.col("o_orderdate")).alias("w"),
         )
-        .distinct()
+        .where(F.col("p").isNotNull() & F.col("w").isNotNull())
+        .groupBy("p", "w")
+        .agg(F.array_sort(F.collect_set("c")).alias("cs"))
     )
-    a, b = cp.alias("a"), cp.alias("b")
     return (
-        a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.w") == F.col("b.w")) & (F.col("a.c") < F.col("b.c")))
-        .select(F.col("a.c").alias("src"), F.col("b.c").alias("dst"))
-        .distinct()
+        contexts.select("cs", F.explode("cs").alias("src"))
+        .select("src", F.explode("cs").alias("dst"))
+        .where(F.col("src") < F.col("dst"))
     )
+
+
+def copurchase_edges(spark, sf_dir: str) -> DataFrame:
+    """Canonical undirected edge set: ``(src BIGINT, dst BIGINT)``, src < dst.
+
+    Two shuffles past the lineitem/orders join: one on (part, month) to
+    collect each context's customers, one for the final distinct over
+    the pairs a customer pair shares in several contexts. Deduplication
+    of repeated (customer, part, month) rows happens inside that first
+    aggregation (``collect_set``), so no separate distinct and no pair
+    self-join is paid — the bulk-relational rewrite of the reference's
+    per-edge existence probe (src/main.js:224-239, J4 in SURVEY.md
+    §2.3).
+    """
+    return _copurchase_pairs(spark, sf_dir).distinct()
 
 
 def copurchase_edges_weighted(spark, sf_dir: str) -> DataFrame:
@@ -91,29 +111,8 @@ def copurchase_edges_weighted(spark, sf_dir: str) -> DataFrame:
     (the natural tie-strength the unweighted builder throws away with
     its final distinct). Same two shuffles; the distinct becomes the
     counting groupBy."""
-    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cp = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            F.col("l_partkey").alias("p"),
-            F.date_trunc("month", F.col("o_orderdate")).alias("w"),
-        )
-        .distinct()
-    )
-    a, b = cp.alias("a"), cp.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.p") == F.col("b.p"))
-            & (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.c") < F.col("b.c")),
-        )
-        .groupBy(F.col("a.c").alias("src"), F.col("b.c").alias("dst"))
-        .agg(F.count("*").alias("weight"))
+    return _copurchase_pairs(spark, sf_dir).groupBy("src", "dst").agg(
+        F.count("*").alias("weight")
     )
 
 

@@ -5,12 +5,28 @@ on the returned DataFrame and Spark pushes them into the parquet reader
 (PushedFilters / ReadSchema in .explain). Replaces the reference's
 whitespace-text + per-row REST ingest (src/main.js:143-173,210-239) with
 a zero-copy columnar scan.
+
+Reads fire no Spark jobs after the first. Inferring a parquet schema is
+one job (footer listing and read): ~90 ms against ~13 ms for a read with
+an explicit schema, which fires none (local[4] on a 4-vCPU host). On the
+co-purchase benchmark workload this removes 15 jobs per pass, about
+0.8 s. ``_read_parquet`` infers once and serves later reads of the same
+file from a schema cache keyed by the path, a file signature (mtime_ns
+and size of every file under the path) and the session confs that
+change inference (``_INFERENCE_CONFS``), so a rewritten file or a
+flipped conf infers afresh. A path that cannot be stat'ed locally (an
+object-store or HDFS URI) is read with inference every time, as is any
+read whose inference fails — a failure is never cached, which keeps the
+events TIMESTAMP(NANOS) fallback in ``read_events_raw`` working.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -29,6 +45,63 @@ TABLES = (
 # cardinality: 5 regions / 25 nations always; see TESTDATA.md).
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
+# Session confs whose value changes the schema parquet inference returns
+# for the same file (nanos as BIGINT, INT96/NTZ timestamp flavour,
+# binary as string, case-folded names, per-file schema merging).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# Inferred schemas by cache key; a StructType is plain Python data, so a
+# schema stays valid across sessions (the conf values are in the key).
+# Bounded: oldest entries go first once it holds _SCHEMA_CACHE_SIZE.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+_SCHEMA_CACHE_SIZE = 256
+_SCHEMA_CACHE_LOCK = threading.Lock()
+
+
+def _file_signature(path: str) -> tuple | None:
+    """``(name, mtime_ns, size)`` of the file, or of every file under the
+    directory in sorted order; None when the path is not a local one."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_mtime_ns, st.st_size),)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                sig.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only on the
+    first read of an unchanged local file under the same inference confs
+    (module docstring)."""
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (path, sig, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_CACHE_LOCK:
+        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_SIZE:
+            _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
+        _SCHEMA_CACHE[key] = df.schema
+    return df
+
 
 def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
     """Read an events parquet file, whatever its ``ts`` physical encoding.
@@ -44,7 +117,7 @@ def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
     read shape normalizes correctly regardless of conf state.
     """
     try:
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
     except Exception as exc:
         # Only the CONFIRMED nanos-rejection flips the session conf: a
         # transient failure (missing file, corrupt footer, permissions)
@@ -60,7 +133,7 @@ def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
         ):
             raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -90,7 +163,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return normalize_events_ts(
             read_events_raw(spark, f"{sf_dir}/{name}.parquet")
         )
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

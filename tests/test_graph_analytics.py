@@ -137,6 +137,66 @@ def test_bfs_distances_default_source_is_min_id(spark):
     assert got == {5: 0, 7: 1, 9: 1}
 
 
+def _random_graph(seed, n=30, m=70):
+    import random
+
+    rng = random.Random(seed)
+    edges = set()
+    while len(edges) < m:
+        a, b = rng.sample(range(3, 3 + n), 2)
+        edges.add((min(a, b), max(a, b)))
+    return sorted(edges)
+
+
+def _adjacency(edges):
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    return adj
+
+
+def test_bfs_distances_default_source_equals_passed_min(spark):
+    from collections import deque
+
+    from graph_database_spark.operators.bfs import bfs_distances
+
+    edges = _random_graph(7) + [(90, 91)]  # plus an unreachable pair
+    adj = _adjacency(edges)
+    src = min(adj)
+    want, queue = {src: 0}, deque([src])
+    while queue:
+        v = queue.popleft()
+        for n in adj[v]:
+            if n not in want:
+                want[n] = want[v] + 1
+                queue.append(n)
+    df = spark.createDataFrame(edges, "src long, dst long")
+    defaulted = sorted(map(tuple, bfs_distances(df).collect()))
+    passed = sorted(map(tuple, bfs_distances(df, source=src).collect()))
+    assert defaulted == passed == sorted(want.items())
+
+
+def test_kcore_matches_python_peel(spark):
+    edges = _random_graph(11)
+    df = spark.createDataFrame(edges, "src long, dst long")
+    for k in (1, 3, 4, 6):
+        adj = _adjacency(edges)
+        while True:
+            dead = [v for v, ns in adj.items() if len(ns) < k]
+            if not dead:
+                break
+            for v in dead:
+                for n in adj.pop(v):
+                    if n in adj:
+                        adj[n].discard(v)
+        want = {v: len(ns) for v, ns in adj.items()}
+        got = {r["id"]: r["degree"] for r in k_core(df, k=k).collect()}
+        assert got == want, k
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert k_core(empty, k=2).count() == 0
+
+
 def test_closeness_path_graph(spark):
     # Path 0-1-2-3 with 2 landmarks (smallest ids 0, 1):
     # source 0: dists 0,1,2,3 -> reached 4, total 6, closeness 3/6

@@ -15,8 +15,10 @@ from pyspark.sql import functions as F
 
 from graph_database_spark.operators.graph import (
     _grid_blocks_for,
+    _hub_probe,
     _wedge_pairs,
     _WEDGE_SALT_THRESHOLD,
+    degree,
     triangle_edges,
 )
 from graph_database_spark.plans.copurchase import symmetrize
@@ -68,3 +70,14 @@ def test_triangle_edges_salted_matches_plain_on_hub(spark):
     assert plain == salted
     # the hub closes one triangle per chord
     assert plain[0] == 300
+
+
+@pytest.mark.parametrize("n_spokes, blocks", [(4000, 1), (_WEDGE_SALT_THRESHOLD + 500, 2)])
+def test_hub_probe_matches_first_probe(spark, n_spokes, blocks):
+    # The max degree read through observe() on the degree checkpoint
+    # picks the grid a separate first() probe of the same frame picks.
+    edges = _hub_edges(spark, n_spokes=n_spokes, n_chords=300).localCheckpoint()
+    deg, got = _hub_probe(edges)
+    first = _grid_blocks_for(degree(edges).agg(F.max("degree")).first()[0])
+    assert got == first == blocks
+    assert sorted(map(tuple, deg.collect())) == sorted(map(tuple, degree(edges).collect()))

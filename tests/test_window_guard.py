@@ -29,6 +29,8 @@ and a corpus-scale single-partition sort.
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
 from graph_database_spark import catalog
@@ -90,20 +92,32 @@ def _unpartitioned_windows(jplan, out, depth=0):
         pass
 
 
-def test_every_global_window_is_allowlisted(spark):
+def test_every_global_window_is_allowlisted(spark, unbuildable_queries):
+    # Each query is built in isolation: one that raises is reported by
+    # name at the end and the sweep goes on, so no failure can hide the
+    # queries after it.
     hits: dict[str, list[str]] = {}
+    errors: dict[str, str] = {}
     for qname, fn in catalog.QUERIES.items():
-        df = fn(spark, SF_DIR)
-        found: list[str] = []
-        _unpartitioned_windows(df._jdf.queryExecution().executedPlan(), found)
+        if qname in unbuildable_queries:
+            continue
+        try:
+            df = fn(spark, SF_DIR)
+            found: list[str] = []
+            _unpartitioned_windows(df._jdf.queryExecution().executedPlan(), found)
+        except Exception as exc:
+            errors[qname] = f"{type(exc).__name__}: {str(exc)[:300]}"
+            continue
         if found:
             hits[qname] = found
+    for qname, reason in unbuildable_queries.items():
+        warnings.warn(f"window sweep skipped {qname}: {reason}")
     offenders = {q: h for q, h in hits.items() if q not in ALLOWED}
-    assert not offenders, (
+    assert not (offenders or errors), (
         "queries with an UNPARTITIONED window not in the audited "
         "allowlist — either bound the frame (groupBy grid / limit pool) "
         "and add it here with its class, or repartition / use "
-        f"rank.global_rank: {offenders}"
+        f"rank.global_rank: {offenders}; queries that failed to build: {errors}"
     )
     # Stale allowlist rows are holes: they would mask a FUTURE global
     # window added to that query. Prune when a plan stops carrying one.
