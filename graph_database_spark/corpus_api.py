@@ -5,9 +5,11 @@ One object over a documents DataFrame; every curation analytic the
 engine implements hangs off it as a lazy method. The facade fixes the
 column contract once (``doc_id`` / ``text``) and delegates to the
 operator modules, which carry the oracle verification and 100 TB
-design notes. Methods compose into a single Catalyst plan per action,
-so `corpus.quality().join(corpus.lang_id(), "doc_id")` plans exactly
-like the hand-written composition.
+design notes. Methods compose into a single Catalyst plan per action.
+To annotate the documents themselves, add the row-local columns of
+``text.quality_columns`` (as curate.py does) rather than joining
+``quality()`` or ``lang_id()`` back on ``doc_id``: each join re-derives
+the documents' lineage once more.
 """
 
 from __future__ import annotations

@@ -31,6 +31,7 @@ __all__ = [
     "LANG_MARKERS",
     "token_stats",
     "language_id",
+    "quality_columns",
     "quality_score",
     "readability",
     "fingerprints",
@@ -134,15 +135,16 @@ def readability(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame) -> DataFrame:
-    """Composite document quality score in [0, 1]:
-    ``(doc_id, n_tokens, punct_ratio, stopword_ratio, length_score, quality)``.
+def quality_columns(text: Column) -> dict[str, Column]:
+    """The quality-score features of one ``text`` column, by output name:
+    ``n_tokens, punct_ratio, stopword_ratio, length_score, quality``.
 
-    Deterministic arithmetic over counted features — the standard
-    pretraining-filter shape (length, punctuation density, stopword
-    density)."""
-    lowered = F.lower(F.col("text"))
-    n_chars = F.greatest(F.length("text"), F.lit(1))
+    Row-local column expressions, so a pipeline annotates rows in place
+    (``df.withColumn("quality", quality_columns(F.col("text"))["quality"])``)
+    instead of joining ``quality_score`` back on ``doc_id``; the
+    definition lives only here."""
+    lowered = F.lower(text)
+    n_chars = F.greatest(F.length(text), F.lit(1))
     n_tokens = _count_pattern(lowered, TOKEN_PATTERN)
     n_tokens_safe = F.greatest(n_tokens, F.lit(1))
     punct = F.length(F.regexp_replace(lowered, "[a-z0-9\\s]", ""))
@@ -155,14 +157,24 @@ def quality_score(docs: DataFrame) -> DataFrame:
         + F.lit(0.4) * F.least(stop_ratio * 4, F.lit(1.0))
         + F.lit(0.2) * (1 - F.least(punct_ratio * 10, F.lit(1.0)))
     )
-    return docs.select(
-        "doc_id",
-        n_tokens.cast("bigint").alias("n_tokens"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(length_score, 6).alias("length_score"),
-        F.round(quality, 6).alias("quality"),
-    )
+    return {
+        "n_tokens": n_tokens.cast("bigint"),
+        "punct_ratio": F.round(punct_ratio, 6),
+        "stopword_ratio": F.round(stop_ratio, 6),
+        "length_score": F.round(length_score, 6),
+        "quality": F.round(quality, 6),
+    }
+
+
+def quality_score(docs: DataFrame) -> DataFrame:
+    """Composite document quality score in [0, 1]:
+    ``(doc_id, n_tokens, punct_ratio, stopword_ratio, length_score, quality)``.
+
+    Deterministic arithmetic over counted features — the standard
+    pretraining-filter shape (length, punctuation density, stopword
+    density); the formula is ``quality_columns``."""
+    cols = quality_columns(F.col("text"))
+    return docs.select("doc_id", *[c.alias(name) for name, c in cols.items()])
 
 
 def fingerprints(docs: DataFrame) -> DataFrame:
