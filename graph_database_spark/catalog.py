@@ -395,8 +395,10 @@ def q_embedding_neardup(spark, sf_dir):
 
 
 def q_embedding_neardup_lsh(spark, sf_dir):
-    # The sub-quadratic scale path (LSH buckets + exact in-bucket verify);
-    # rows-only — recall vs the exact plan is pinned by tests/test_similarity.py.
+    # The sub-quadratic scale path (LSH buckets + exact in-bucket verify)
+    # at its defaults: corpus-count-derived width, 16 tables. The oracle
+    # replays the md5 buckets; recall vs the exact plan is pinned by
+    # tests/test_similarity.py.
     return S.lsh_pairs_above(load_table(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
@@ -407,22 +409,20 @@ def q_ann_lsh(spark, sf_dir):
 
 
 def q_ann_lsh_md5(spark, sf_dir):
-    # Hash-verified twin of ann_lsh (dedup_minhash_md5 philosophy): md5
-    # hyperplane signs + integer micro-unit sums make the bucketing
-    # order-exact, and the in-bucket rounded cosine is the form
-    # similarity_topk already verifies — so the full LSH machinery
-    # (signs -> sums -> bit-fold -> bucket join -> re-rank) is
-    # cross-engine checked; production ann_lsh keeps xxhash64 signs.
+    # ann_lsh at a pinned width (6 bits, 8 tables): md5 hyperplane signs
+    # + integer micro-unit sums make the bucketing order-exact, and the
+    # in-bucket rounded cosine is the form similarity_topk already
+    # verifies — so the full LSH machinery (signs -> sums -> bit-fold ->
+    # bucket join -> re-rank) is cross-engine checked at a second shape.
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return S.lsh_topk_md5(queries, emb, k=10, n_bits=6, n_tables=8)
+    return S.lsh_topk(queries, emb, k=10, n_bits=6, n_tables=8)
 
 
 def q_embedding_neardup_lsh_md5(spark, sf_dir):
-    # Hash-verified twin of embedding_neardup_lsh on the same md5
-    # bucketing leg as ann_lsh_md5 (shared _md5_buckets).
+    # embedding_neardup_lsh at the pinned width of ann_lsh_md5.
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_pairs_above_md5(emb, threshold=0.35, n_bits=6, n_tables=8)
+    return S.lsh_pairs_above(emb, threshold=0.35, n_bits=6, n_tables=8)
 
 
 def q_snap_metrics(spark, sf_dir):
@@ -5633,7 +5633,7 @@ def q_knn_graph(spark, sf_dir):
     # refused to run past the 100k-row broadcast guard — VERDICT r6 #1);
     # the oracle replays the same buckets, so this stays hash-verified.
     return S.mutual_knn_graph(
-        load_table(spark, sf_dir, "embeddings"), k=10, method="lsh_md5",
+        load_table(spark, sf_dir, "embeddings"), k=10, method="lsh",
         # r8: width is corpus-count-derived on BOTH sides (_auto_bits /
         # _AUTO_BITS_SQL) — lands at 4 bits for the shipped 500-2k
         # corpus (recall 0.88 vs 0.32 at the old 6-bit pin, floor
@@ -5674,7 +5674,7 @@ def q_lof_outliers(spark, sf_dir):
     # Local Outlier Factor (r10): the density-RATIO anomaly score over
     # the embeddings table — completes the outlier family next to the
     # global z-score (embedding_outliers) and the univariate MAD screen.
-    # Neighbors ride the hash-verified lsh_topk_md5 leg (same auto-bit
+    # Neighbors ride the hash-verified lsh_topk leg (same auto-bit
     # bucket construction the knn_graph oracle replays); distances and
     # the whole kdist/reachability/lrd/ratio chain are exact integers
     # with truncating division (operators/lof.py).
@@ -5987,7 +5987,7 @@ def q_embedding_outliers(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     # n_bits=None -> corpus-count-derived width, mirrored in the oracle
     # by _AUTO_BITS_SQL (r7 VERDICT wrong-#3).
-    topk = S.lsh_topk_md5(emb, emb, k=10, n_bits=None, n_tables=16)
+    topk = S.lsh_topk(emb, emb, k=10, n_bits=None, n_tables=16)
     sim_micro = F.round(F.col("sim") * F.lit(1000000.0), 0).cast("long")
     return (
         topk.select("query_id", sim_micro.alias("sm"))
@@ -9625,11 +9625,11 @@ def _md5_bucket_ctes(dim: int, n_bits: "int | str", n_tables: int) -> str:
 
 
 def _build_ann_lsh_md5_sql(
-    dim: int = 64, n_bits: int = 6, n_tables: int = 8, k: int = 10
+    dim: int = 64, n_bits: "int | str" = 6, n_tables: int = 8, k: int = 10
 ) -> str:
     # Bucketing CTEs + rounded-6 in-bucket cosine and the
     # (sim DESC, cand_id) row_number re-rank — the similarity_topk
-    # oracle's form. Mirrors lsh_topk_md5.
+    # oracle's form. Mirrors lsh_topk over every 50th vector as queries.
     return f"""
     WITH {_md5_bucket_ctes(dim, n_bits, n_tables)},
     cand AS (
@@ -9663,9 +9663,10 @@ def _build_ann_lsh_md5_sql(
 
 
 def _build_lsh_pairs_md5_sql(
-    dim: int = 64, n_bits: int = 6, n_tables: int = 8, threshold: float = 0.35
+    dim: int = 64, n_bits: "int | str" = 6, n_tables: int = 8,
+    threshold: float = 0.35,
 ) -> str:
-    # Mirrors lsh_pairs_above_md5: same bucketing CTEs, candidate pairs
+    # Mirrors lsh_pairs_above: same bucketing CTEs, candidate pairs
     # are id_a < id_b sharing any (table, bucket), rounded-6 verify.
     return f"""
     WITH {_md5_bucket_ctes(dim, n_bits, n_tables)},
@@ -9697,7 +9698,7 @@ def _md5_all_topk_ctes(
     # %50 subsample): bucket CTEs + in-bucket exact rounded-6 re-rank,
     # ending in a `topk(query_id, cand_id, sim, rnk)` CTE. Shared by the
     # knn_graph and embedding_outliers oracles, which replay the Spark
-    # side's lsh_topk_md5 candidates exactly.
+    # side's lsh_topk candidates exactly.
     return f"""{_md5_bucket_ctes(dim, n_bits, n_tables)},
     cand AS (
         SELECT DISTINCT qa.vec_id AS query_id, cb.vec_id AS cand_id
@@ -9940,6 +9941,10 @@ ORACLES["semdedup"] = _build_semdedup_sql()
 ORACLES["sssp_weighted"] = _build_sssp_sql()
 ORACLES["ann_lsh_md5"] = _build_ann_lsh_md5_sql()
 ORACLES["embedding_neardup_lsh_md5"] = _build_lsh_pairs_md5_sql()
+ORACLES["ann_lsh"] = _build_ann_lsh_md5_sql(n_bits=_AUTO_BITS_SQL, n_tables=16)
+ORACLES["embedding_neardup_lsh"] = _build_lsh_pairs_md5_sql(
+    n_bits=_AUTO_BITS_SQL, n_tables=16
+)
 ORACLES["ann_ivf_md5"] = _build_ann_ivf_md5_sql()
 ORACLES["doc_chunks"] = f"""
     WITH toks AS (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents),
@@ -16111,7 +16116,7 @@ def q_label_spreading(spark, sf_dir):
     lbl = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("vid"), "lang"
     )
-    topk = S.lsh_topk_md5(emb, emb, k=10, n_bits=None, n_tables=16).select(
+    topk = S.lsh_topk(emb, emb, k=10, n_bits=None, n_tables=16).select(
         F.col("query_id").cast("long").alias("q"),
         F.col("cand_id").cast("long").alias("c"),
     ).localCheckpoint()  # both spreading rounds read it
@@ -16171,7 +16176,7 @@ def q_ann_recall_audit(spark, sf_dir):
     true_tk = S.brute_force_topk(queries, emb, k=10).select(
         "query_id", "cand_id"
     )
-    appr = S.lsh_topk_md5(
+    appr = S.lsh_topk(
         queries, emb, k=10, n_bits=None, n_tables=16
     ).select("query_id", "cand_id")
     t = true_tk.groupBy("query_id").agg(F.count("*").alias("n_true"))
@@ -16211,7 +16216,7 @@ def q_knn_label_noise(spark, sf_dir):
     lbl = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("vid"), "lang"
     )
-    topk = S.lsh_topk_md5(emb, emb, k=10, n_bits=None, n_tables=16)
+    topk = S.lsh_topk(emb, emb, k=10, n_bits=None, n_tables=16)
     e = topk.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("cand_id").cast("long").alias("cand_id"),
@@ -17914,8 +17919,6 @@ ROWS_ONLY = frozenset({
     "dedup_minhash",
     "dedup_simhash",
     "ngram_jaccard",
-    "ann_lsh",
-    "embedding_neardup_lsh",
     "snap_metrics",
     "distinct_users_sketch",
     "staged_dedup",

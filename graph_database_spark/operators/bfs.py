@@ -81,7 +81,7 @@ def bfs_distances(
     # read off the prev column carried by the state — as an observe()
     # metric riding the checkpoint job (no separate probe job).
     out = fixpoint(
-        init, step, None, max_iterations, name="bfs_distances", fuse=3,
+        init, step, max_iterations, name="bfs_distances", fuse=3,
         probe=F.sum((~F.col("dist").eqNullSafe(F.col("prev"))).cast("long")),
     )
     return out.where(F.col("dist").isNotNull()).select("id", "dist")

@@ -74,7 +74,7 @@ def closeness_sampled(
         )
 
     out = fixpoint(
-        init, step, None, max_iterations, name="closeness_sampled", fuse=3,
+        init, step, max_iterations, name="closeness_sampled", fuse=3,
         probe=F.sum((~F.col("dist").eqNullSafe(F.col("prev"))).cast("long")),
     )
     return (

@@ -70,7 +70,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
         )
 
     out = fixpoint(
-        labels, step, None, max_iterations,
+        labels, step, max_iterations,
         name="connected_components", fuse=3,
         probe=F.sum((F.col("component") != F.col("prev")).cast("long")),
     )

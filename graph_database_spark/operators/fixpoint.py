@@ -65,35 +65,30 @@ def materialize(df: DataFrame, parts: int | None = None) -> DataFrame:
 def fixpoint(
     initial: DataFrame,
     step: Callable[[DataFrame], DataFrame],
-    converged: Callable[[DataFrame, DataFrame], bool] | None,
     max_iterations: int,
     name: str = "fixpoint",
     on_exhaust: str = "raise",
     stats: dict | None = None,
-    reset_stats: bool = False,
     fuse: int = 1,
     probe: Column | None = None,
     probe_done: Callable[[object, object], bool] | None = None,
     probe_seed: bool = False,
 ) -> DataFrame:
-    """Iterate ``state = step(state)`` until ``converged(old, new)``.
+    """Iterate ``state = step(state)`` until the ``probe`` rule holds,
+    or for exactly ``max_iterations`` rounds when ``probe`` is None (a
+    fixed round budget; pair it with ``on_exhaust='return'``).
 
     Both the incoming and produced state are materialized (coalesce +
-    localCheckpoint) so ``step`` and ``converged`` always see flat
-    lineage. ``converged`` runs on materialized frames — a count() or
-    isEmpty() probe there is one cheap job, not a recomputation.
+    localCheckpoint) so ``step`` always sees flat lineage.
 
     ``on_exhaust``: 'raise' (default) refuses to return a possibly
     unconverged state — silent partial results are wrong results for
     label-propagation-style algorithms (ADVICE r2 on components);
     'return' hands back the last iterate, the right contract for
-    anytime algorithms (PageRank's fixed round budget).
-
-    ``reset_stats``: set True when ``step`` SELF-JOINS the evolving
-    state (pointer-doubling shortcuts, Borůvka jumps) — see
-    ``reset_plan_stats``: without it the carried sizeInBytes estimate
-    squares per round and the driver drowns in BigInteger math.
-    State-join-STATIC steps don't need it.
+    anytime algorithms (PageRank's fixed round budget). A ``step`` that
+    SELF-JOINS the evolving state (pointer-doubling, Borůvka jumps)
+    does not fit this loop: run it by hand with ``reset_plan_stats`` per
+    round, as kcore.onion_layers and msf do.
 
     ``fuse``: run this many ``step`` applications per materialization.
     Per-round cost at moderate scale is DOMINATED by the fixed
@@ -105,24 +100,23 @@ def fixpoint(
     idempotent at convergence (monotone label relaxations: hash-min,
     max-layer) — a fixed-budget anytime loop (PageRank) or a per-round
     readout (onion peels) must keep fuse=1 because overshooting rounds
-    there changes the answer. Convergence still sound: ``converged``
+    there changes the answer. Convergence still sound: ``probe``
     sees the LAST fused step's prev-columns, and "last step changed
     nothing" means the state is a fixpoint of one step.
 
     ``probe`` (r14 optimization round): an aggregate Column that rides
     the checkpoint job as a ``DataFrame.observe`` metric (JVM-side
     CollectMetricsExec accumulator — the onion_layers r14 move,
-    generalized), replacing the separate per-round convergence job.
-    When given, ``converged`` is ignored (pass None); the round is
+    generalized), so convergence costs no job of its own. The round is
     converged when ``probe_done(prev_value, value)`` is True (default:
     value is 0 or NULL — the "no row changed" rule every != prev probe
     reduces to). ``probe_seed`` also observes ``probe`` on the initial
     state's checkpoint and seeds prev_value with it (count-stability
     probes need the starting count; reading it there costs no job);
-    prev_value otherwise starts as None. Per round this removes one
-    scheduled job — at 1000 executors one full cluster barrier — and
-    at sf0.1 the ~0.1 s fixed probe-job cost (SCALE.md r13 floor
-    measurement).
+    prev_value otherwise starts as None. Against a separate probe job
+    per round this saves one scheduled job — at 1000 executors one full
+    cluster barrier — and at sf0.1 the ~0.1 s fixed probe-job cost
+    (SCALE.md r13 floor measurement).
     """
     from pyspark.sql import Observation
 
@@ -134,32 +128,26 @@ def fixpoint(
         prev_val = seed.get["p"]
     else:
         state = materialize(initial, parts)
-    if reset_stats:
-        state = reset_plan_stats(state)
     for i in range(max_iterations):
         s = state
         for _ in range(fuse):
             s = step(s)
-        if probe is not None:
+        if probe is None:
+            new = materialize(s, parts)
+            done = False
+        else:
             # Anonymous Observation: names must be unique among live
             # observations, and concurrent fixpoints (percolation runs
             # three CCs in a thread pool) would collide on a
             # name-per-round scheme.
             obs = Observation()
             new = materialize(s.observe(obs, probe.alias("p")), parts)
-        else:
-            new = materialize(s, parts)
-        if reset_stats:
-            new = reset_plan_stats(new)
-        if probe is not None:
             val = obs.get["p"]
             if probe_done is not None:
                 done = probe_done(prev_val, val)
             else:
                 done = not val  # 0 or NULL == no row changed
             prev_val = val
-        else:
-            done = converged(state, new)
         if done:
             if stats is not None:
                 # observability hook (stress runs read this; no behavior

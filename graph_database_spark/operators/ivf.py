@@ -96,7 +96,7 @@ def ivf_topk_md5(
     n_probe: int = 4,
 ) -> DataFrame:
     """Hash-verifiable twin of ``ivf_topk`` (the md5-twin philosophy —
-    see similarity.lsh_topk_md5): same plan (driver-side bounded model,
+    see similarity.lsh_topk): same plan (driver-side bounded model,
     narrow cell assignment, one cell-key shuffle, exact in-cell
     re-rank), but the centroid draw is md5-ordered and cell similarity
     is an INTEGER micro-unit dot product, so cell assignment and probe

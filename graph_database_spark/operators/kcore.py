@@ -60,7 +60,7 @@ def k_core(edges: DataFrame, k: int, max_iterations: int = 200) -> DataFrame:
     # checkpoint job as an observe() metric, the initial edge frame's
     # checkpoint included (probe_seed), so no round pays a count job.
     core_edges = fixpoint(
-        symmetrize(edges), step, None, max_iterations, name="k_core",
+        symmetrize(edges), step, max_iterations, name="k_core",
         probe=F.count(F.lit(1)),
         probe_done=lambda prev, cur: prev is not None and cur == prev,
         probe_seed=True,

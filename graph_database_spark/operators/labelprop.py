@@ -156,7 +156,6 @@ def label_propagation(
     out = fixpoint(
         labels,
         step_counted if mode == "counted" else step,
-        None,
         max_iterations,
         name="label_propagation",
         on_exhaust="return",

@@ -7,7 +7,7 @@ densities don't mask each other (the failure mode of any global
 threshold).
 
 Built entirely on the hash-verified kNN machinery: neighbors come from
-``similarity.lsh_topk_md5`` (LSH-bucketed candidates + exact in-bucket
+``similarity.lsh_topk`` (LSH-bucketed candidates + exact in-bucket
 re-rank, the knn_graph leg), distances are exact integer micro cosine
 distances (1e6 - round(sim * 1e6)), and the LOF chain — k-distance,
 reachability, local reachability density, the final ratio — is pure
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graph_database_spark.operators.similarity import lsh_topk_md5
+from graph_database_spark.operators.similarity import lsh_topk
 
 __all__ = ["lof_scores"]
 
@@ -52,7 +52,7 @@ def lof_scores(
     the final numerator sum(lrd_m) * 1e6 stays <= ~1e17 — inside int64
     (the max(.., 1) guard covers the all-duplicates degenerate bucket).
     """
-    topk = lsh_topk_md5(
+    topk = lsh_topk(
         vectors, vectors, k=k, id_col=id_col, vec_col=vec_col,
         n_bits=n_bits, n_tables=n_tables,
     )

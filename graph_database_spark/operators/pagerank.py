@@ -149,7 +149,7 @@ def pagerank(
     # `prev` rides the state, so the max-delta convergence probe is an
     # observe() metric on the checkpoint job — no separate job, no join.
     out = fixpoint(
-        init, step, None, max_iterations, name="pagerank",
+        init, step, max_iterations, name="pagerank",
         on_exhaust="return",
         probe=F.max(F.abs(F.col("rank") - F.col("prev"))),
         probe_done=lambda prev, cur: cur is not None and cur < tol,
@@ -280,7 +280,6 @@ def pagerank_quantized(
     out = fixpoint(
         init,
         step,
-        lambda old, new: False,
         iterations,
         name="pagerank_quantized",
         on_exhaust="return",

@@ -106,7 +106,7 @@ def _hash_min(
         )
 
     return fixpoint(
-        labels, step, None, max_rounds, name=name, stats=stats, fuse=3,
+        labels, step, max_rounds, name=name, stats=stats, fuse=3,
         probe=F.sum((F.col(out_col) != F.col("prev")).cast("long")),
     ).select("id", out_col)
 
@@ -246,7 +246,7 @@ def scc_reach_sketch(
         )
 
     regs = fixpoint(
-        regs0, step, None, max_rounds, name="scc_reach", fuse=2,
+        regs0, step, max_rounds, name="scc_reach", fuse=2,
         probe=F.sum((F.col("_reg") != F.col("prev")).cast("long")),
     )
     ssum = (
@@ -301,7 +301,7 @@ def condensation_layers(
         )
 
     out = fixpoint(
-        layers, step, None, max_rounds, name="condensation_layers", fuse=2,
+        layers, step, max_rounds, name="condensation_layers", fuse=2,
         probe=F.sum((F.col("layer") != F.col("prev")).cast("long")),
     )
     members = scc.groupBy("scc_id").agg(F.count("*").alias("n_members"))

@@ -19,10 +19,26 @@ Three paths:
                       1 shuffle on (table, bucket), exact re-rank /
                       verify inside buckets, recall tuned by n_tables.
 
-All vector math is JVM higher-order functions (functions/vectors.py) —
-no explode of embeddings, no Python. Norms are computed ONCE per row
-before any join (3x fewer array traversals per pair than inlining
-cosine_similarity, which re-derives both norms pairwise).
+One hyperplane family serves every LSH caller (the catalog queries,
+mutual_knn_graph, operators/lof.py and the persisted index in
+sinks/ann.py): md5-parity ±1 signs against integer micro-unit sums, so
+DuckDB oracles replay the bucket assignment exactly.
+
+Where the math runs: the exact paths (brute_force_topk,
+cosine_pairs_above) are JVM higher-order functions (functions/vectors.py)
+with no explode of embeddings. The LSH paths hand vectors to numpy: the
+hyperplane sums are one int64 matmul per Arrow batch (``mapInArrow``,
+_np_bucket_explode), and the in-bucket re-rank scores each (table,
+bucket) cell in one ``applyInPandas`` call (_np_bucket_dots), with the
+dot product folded in element order so it is bit-identical to the JVM
+left fold. Norms are computed ONCE per row before any join (3x fewer
+array traversals per pair than inlining cosine_similarity, which
+re-derives both norms pairwise).
+
+Self top-k: ``lsh_topk(df, df)`` detects the self case by object
+identity (``queries is candidates``) and then buckets and exchanges the
+frame once instead of twice. Two distinct frames with the same rows
+give the same result, at twice the bucketing cost.
 """
 
 from __future__ import annotations
@@ -37,9 +53,7 @@ __all__ = [
     "brute_force_topk",
     "cosine_pairs_above",
     "lsh_topk",
-    "lsh_topk_md5",
     "lsh_pairs_above",
-    "lsh_pairs_above_md5",
     "mutual_knn_graph",
     "label_centroid_sim",
 ]
@@ -174,67 +188,24 @@ def _auto_bits(df: DataFrame, n_bits: int | None, target_bucket: int = 128) -> i
     return max(4, math.ceil(math.log2(max(n / target_bucket, 1.0))))
 
 
-# Sign matrices are tiny (dim x total_bits) and deterministic, so they
-# are computed once per (dim, bits) shape by one dim-row Spark job and
-# cached as numpy arrays for the bucketing kernel (r15; the r14 form
-# cached a constant-folded plan literal for the JVM HOF fold — see
-# git history for the F.array py4j trap that motivated the cache).
-# Keyed on values, not sessions: the hashes are session-independent.
-_SIGN_CACHE: dict[tuple[int, int], object] = {}
-
-
-def _sign_matrix(df: DataFrame, dim: int, total_bits: int):
-    """``(dim, total_bits)`` numpy float64 matrix of the deterministic
-    ±1 hyperplane signs h_j[i] = sign(xxhash64(j, i)).
-
-    The signs were originally re-hashed per array element inside the
-    aggregate lambda (64 xxhash64 calls per element, interpreted — HOF
-    lambdas never enter whole-stage codegen); r14 materialized them once
-    via one dim-row driver job into a constant-folded plan literal; r15
-    hands the same values to the numpy bucketing kernel instead (the
-    hash family is unchanged — still Spark's own xxhash64)."""
-    import numpy as np
-
-    key = (dim, total_bits)
-    if key not in _SIGN_CACHE:
-        spark = df.sparkSession
-        idx = spark.range(dim).select(F.col("id").cast("int").alias("i"))
-        cols = [
-            ((F.xxhash64(F.lit(j), F.col("i")).bitwiseAND(F.lit(1)) * 2 - 1).cast("double")).alias(f"s{j}")
-            for j in range(total_bits)
-        ]
-        rows = sorted(idx.select("i", *cols).collect(), key=lambda r: r["i"])
-        _SIGN_CACHE[key] = np.asarray(
-            [[float(r[f"s{j}"]) for j in range(total_bits)] for r in rows],
-            dtype=np.float64,
-        )
-    return _SIGN_CACHE[key]
-
-
 def _np_bucket_explode(
-    base: DataFrame, suffix: str, n_bits: int, n_tables: int,
-    signs, integer: bool,
+    base: DataFrame, suffix: str, n_bits: int, n_tables: int, signs,
 ) -> DataFrame:
     """``(id, v, n, table, bucket)`` — one row per (vector, table), with
     buckets from ONE numpy hyperplane-sum kernel per Arrow batch
     (``mapInArrow``, r15; guide §4.2). The r14 shape ran the sums as an
     aggregate/zip_with HOF — dim x total_bits INTERPRETED ops per row.
 
-    Exactness: the md5 family (``integer=True``) sums micro-int
-    ``xs`` against a ±1 int64 matrix — an int64 matmul is the same
-    order-free exact integers the JVM fold produced. The xxhash family
-    (``integer=False``) accumulates float64 LEFT-FOLD: the kernel adds
-    one ``x_i * s_ij`` outer product per dimension in element order —
-    each step one IEEE multiply then one add, bit-identical to the old
-    lambda (numpy elementwise ops do not fuse). Bucket codes are the
-    same big-endian integer bit-folds.
+    Exactness: the micro-int ``xs`` sum against the ±1 int64 sign
+    matrix as one int64 matmul — order-free exact integers, the same
+    values the oracle's SQL ``sum`` produces. Bucket codes are
+    big-endian integer bit-folds.
 
     ``base`` must be ``(id{suffix}, v{suffix}, n{suffix}, xs)`` with
-    ``xs`` the micro-int array (md5) or the double-cast vector (xxhash).
+    ``xs`` the micro-int array.
     """
     import numpy as np
 
-    total_bits = n_bits * n_tables
     dim = signs.shape[0]
     id_f, v_f, n_f = f"id{suffix}", f"v{suffix}", f"n{suffix}"
     id_t = base.schema[id_f].dataType.simpleString()
@@ -258,14 +229,7 @@ def _np_bucket_explode(
                     f"lsh buckets: ragged vectors ({flat.size} values"
                     f" for {m} x {dim})"
                 )
-            X = flat.reshape(m, dim)
-            if integer:
-                H = X.astype(np.int64) @ signs
-            else:
-                Xd = X.astype(np.float64)
-                H = np.zeros((m, total_bits), dtype=np.float64)
-                for i in range(dim):  # left-fold element order
-                    H += np.multiply.outer(Xd[:, i], signs[i, :])
+            H = flat.reshape(m, dim).astype(np.int64) @ signs
             bi = (H > 0).astype(np.int64)
             codes = np.zeros((m, n_tables), dtype=np.int64)
             for t in range(n_tables):
@@ -300,23 +264,6 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     return first["d"] if first is not None else 1
 
 
-def _with_buckets(
-    df: DataFrame, id_col: str, vec_col: str, suffix: str,
-    n_bits: int, n_tables: int, dim: int | None = None,
-) -> DataFrame:
-    """(id, v, n, table, bucket) — one row per (vector, table); bucket t
-    packs bits [t*n_bits, (t+1)*n_bits). r15: sums + bit-folds run in
-    the numpy kernel (_np_bucket_explode), float64 left-fold order
-    preserved bit for bit."""
-    if dim is None:
-        dim = _vec_dim(df, vec_col)
-    signs = _sign_matrix(df, dim, n_bits * n_tables)
-    base = _with_norm(spread(df), id_col, vec_col, suffix).withColumn(
-        "xs", F.transform(F.col(f"v{suffix}"), lambda x: x.cast("double"))
-    )
-    return _np_bucket_explode(base, suffix, n_bits, n_tables, signs, False)
-
-
 def _np_bucket_dots(
     qb: DataFrame | None, cb: DataFrame, same: bool, ordered: bool,
     parallelism_mult: int = 2,
@@ -337,8 +284,8 @@ def _np_bucket_dots(
     vectorized outer-product accumulations. For self-joins (``same``)
     the bucketed frame is built and exchanged ONCE instead of twice.
 
-    ``ordered``: emit only id_q < id_c (the pairs_above twins);
-    otherwise both directions minus self-pairs (the top-k twins).
+    ``ordered``: emit only id_q < id_c (lsh_pairs_above); otherwise
+    both directions minus self-pairs (lsh_topk).
 
     The repartition is USER-PINNED on the group key: AQE coalesces
     shuffle partitions by BYTES, and these cells are tiny bytes but
@@ -370,15 +317,6 @@ def _np_bucket_dots(
     out_schema = (
         f"query_id {id_t}, cand_id {id_t}, dt double, na double, nb double"
     )
-    empty = pd.DataFrame(
-        {
-            "query_id": pd.Series(dtype="int64"),
-            "cand_id": pd.Series(dtype="int64"),
-            "dt": pd.Series(dtype="float64"),
-            "na": pd.Series(dtype="float64"),
-            "nb": pd.Series(dtype="float64"),
-        }
-    )
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         V = np.asarray(
@@ -394,7 +332,14 @@ def _np_bucket_dots(
             qi = np.flatnonzero(side == 0)
             ci = np.flatnonzero(side == 1)
             if qi.size == 0 or ci.size == 0:
-                return empty
+                # Typed by the input's own ids, so the Arrow conversion
+                # to out_schema holds for any id type, not just bigint.
+                return pd.DataFrame(
+                    {
+                        "query_id": ids[:0], "cand_id": ids[:0],
+                        "dt": ns[:0], "na": ns[:0], "nb": ns[:0],
+                    }
+                )
         Q, C = V[qi], V[ci]
         # Left-fold dot: one multiply + one add per dimension, in order.
         acc = np.zeros((len(qi), len(ci)), dtype=np.float64)
@@ -452,52 +397,11 @@ def _dedup_rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def lsh_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int | None = None,
-    n_tables: int = 16,
-) -> DataFrame:
-    """Approximate top-k via random-hyperplane LSH:
-    ``(query_id, cand_id, sim, rank)``.
-
-    n_tables independent bucketings (bit-slices of one shared sign-sum
-    array, computed in a single vector pass); query and candidate meet if
-    they share a bucket in ANY table. One shuffle on (table, bucket);
-    exact cosine re-rank on survivors. ``n_bits`` defaults to the
-    corpus-size-derived width (_auto_bits): 4 bits -> 16 buckets at the
-    driver's SFs (tuned for recall@10 ~ 0.9 on the synthetic embeddings,
-    whose neighbors are barely above the random-cosine noise floor — the
-    hardest case for LSH), growing as log2(N/128) so bucket occupancy
-    stays bounded at scale. Raise n_tables to buy recall back at larger
-    widths — candidate cost is linear in n_tables; real clustered
-    embeddings need far fewer tables than this synthetic worst case."""
-    n_bits = _auto_bits(candidates, n_bits)
-    dim = _vec_dim(candidates, vec_col)
-    # Score INSIDE the bucket meet, before dedup: sim is identical for
-    # every (table, bucket) copy of a pair, so deduping on the scored
-    # 24-byte rows is equivalent — and the dedup shuffle stops carrying
-    # two dim-double vectors per candidate. r15: the meet + re-rank run
-    # per bucket in numpy (_np_bucket_dots); a SELF top-k builds and
-    # exchanges the bucketed frame once instead of twice.
-    same = queries is candidates
-    cb = _with_buckets(candidates, id_col, vec_col, "b", n_bits, n_tables, dim)
-    qb = (
-        None if same
-        else _with_buckets(queries, id_col, vec_col, "a", n_bits, n_tables, dim)
-    )
-    scored = _np_bucket_dots(qb, cb, same, ordered=False).select(
-        "query_id", "cand_id", _np_sim(6).alias("sim")
-    )
-    return _dedup_rank_topk(scored, k)
-
-
-# md5-twin sign matrices (lsh_topk_md5): numpy int64, cached like
-# _SIGN_CACHE and built by one driver-side Spark job so the ±1 family
-# is Spark's own md5, not a Python reimplementation.
+# Sign matrices are tiny (dim x total_bits) and deterministic: numpy
+# int64, computed once per (dim, bits) shape by one dim-row Spark job
+# (so the ±1 family is Spark's own md5, not a Python reimplementation)
+# and cached for the bucketing kernel. Keyed on values, not sessions:
+# the hashes are session-independent.
 _MD5_SIGN_CACHE: dict[tuple[int, int], object] = {}
 
 
@@ -505,9 +409,7 @@ def _md5_sign_matrix(df: DataFrame, dim: int, total_bits: int):
     """``s[i][j] = (parity of first md5 hex digit of "i|j") * 2 - 1`` as
     a ``(dim, total_bits)`` numpy int64 matrix — the oracle-expressible
     hyperplane family: DuckDB derives the SAME signs from md5 in SQL, so
-    the bucket assignment is cross-engine verifiable (the xxhash64
-    family in _sign_matrix is not). Values still come from one dim-row
-    Spark job so the family is Spark's own md5, not a reimplementation."""
+    the bucket assignment is cross-engine verifiable."""
     import numpy as np
 
     key = (dim, total_bits)
@@ -543,12 +445,13 @@ def _md5_buckets(
     df: DataFrame, id_col: str, vec_col: str, suffix: str,
     n_bits: int, n_tables: int, dim: int,
 ) -> DataFrame:
-    """The cross-engine-exact bucketing leg shared by the md5 twins:
-    integer micro-unit hyperplane sums (order-independent) against the
-    md5-parity sign matrix, then big-endian bit-fold bucket codes.
-    Same output shape as _with_buckets. r15: the sums run as one exact
-    int64 matmul per Arrow batch (_np_bucket_explode); the micro
-    rounding (round half-up) stays in the JVM."""
+    """``(id, v, n, table, bucket)`` — one row per (vector, table);
+    bucket t packs bits [t*n_bits, (t+1)*n_bits). Integer micro-unit
+    hyperplane sums (order-independent) against the md5-parity sign
+    matrix, then big-endian bit-fold bucket codes. The sums run as one
+    exact int64 matmul per Arrow batch (_np_bucket_explode); the micro
+    rounding (round half-up) stays in the JVM. Shared by lsh_topk,
+    lsh_pairs_above and the persisted index (sinks/ann.py)."""
     signs = _md5_sign_matrix(df, dim, n_bits * n_tables)
     base = _with_norm(spread(df), id_col, vec_col, suffix).withColumn(
         "xs",
@@ -557,22 +460,27 @@ def _md5_buckets(
             lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
         ),
     )
-    return _np_bucket_explode(base, suffix, n_bits, n_tables, signs, True)
+    return _np_bucket_explode(base, suffix, n_bits, n_tables, signs)
 
 
-def lsh_topk_md5(
+def lsh_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_bits: int | None = None,
-    n_tables: int = 8,
+    n_tables: int = 16,
 ) -> DataFrame:
-    """Hash-verifiable twin of ``lsh_topk``: same plan shape (ONE shuffle
-    on (table, bucket), exact in-bucket cosine re-rank), but every
-    engine-divergent ingredient replaced by a cross-engine-exact one —
-    the ``dedup_minhash_md5`` philosophy applied to ANN (VERDICT r5 #7):
+    """Approximate top-k via random-hyperplane LSH:
+    ``(query_id, cand_id, sim, rank)``.
+
+    n_tables independent bucketings (bit-slices of one shared sign-sum
+    array, computed in a single vector pass); query and candidate meet if
+    they share a bucket in ANY table. One shuffle on (table, bucket);
+    exact cosine re-rank on survivors. Every ingredient is
+    cross-engine-exact, so DuckDB replays the result bit for bit (the
+    ``dedup_minhash_md5`` philosophy applied to ANN):
 
     - hyperplane signs from md5 parity (oracle derives them in SQL),
     - hyperplane sums over INTEGER micro-units
@@ -582,15 +490,25 @@ def lsh_topk_md5(
     - the re-rank cosine is the rounded-6 form ``similarity_topk``
       already hash-verifies.
 
-    Production keeps ``lsh_topk`` (xxhash64 signs, float sums — faster);
-    this twin certifies the banding/bucketing/re-rank MACHINERY against
-    DuckDB. Both share bucket occupancy behavior at equal n_bits.
-    ``n_bits`` defaults to the corpus-count-derived width (_auto_bits);
-    oracles mirror the same formula via catalog._AUTO_BITS_SQL."""
+    ``n_bits`` defaults to the corpus-size-derived width (_auto_bits,
+    mirrored in oracles by catalog._AUTO_BITS_SQL): 4 bits -> 16 buckets
+    at the shipped SFs (recall@10 ~ 0.9 on the synthetic embeddings,
+    whose neighbors are barely above the random-cosine noise floor — the
+    hardest case for LSH), growing as log2(N/128) so bucket occupancy
+    stays bounded at scale. Raise n_tables to buy recall back at larger
+    widths — candidate cost is linear in n_tables; real clustered
+    embeddings need far fewer tables than this synthetic worst case.
+
+    Pass the SAME frame object as ``queries`` and ``candidates`` for a
+    self top-k: ``queries is candidates`` builds and exchanges the
+    bucketed frame once instead of twice."""
     n_bits = _auto_bits(candidates, n_bits)
     dim = _vec_dim(candidates, vec_col)
-    # r15: per-bucket numpy meet + re-rank (see lsh_topk / _np_bucket_dots)
-    # — the md5 bucketing and the rounded-6 cosine bits are unchanged.
+    # Score INSIDE the bucket meet, before dedup: sim is identical for
+    # every (table, bucket) copy of a pair, so deduping on the scored
+    # 24-byte rows is equivalent — and the dedup shuffle stops carrying
+    # two dim-double vectors per candidate. The meet + re-rank run per
+    # bucket in numpy (_np_bucket_dots).
     same = queries is candidates
     cb = _md5_buckets(candidates, id_col, vec_col, "b", n_bits, n_tables, dim)
     qb = (
@@ -603,33 +521,6 @@ def lsh_topk_md5(
     return _dedup_rank_topk(scored, k)
 
 
-def lsh_pairs_above_md5(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 6,
-    n_tables: int = 8,
-) -> DataFrame:
-    """Hash-verifiable twin of ``lsh_pairs_above`` on the shared
-    ``_md5_buckets`` leg — same plan (bucket join, score-then-dedup on
-    scalar rows), cross-engine-exact bucketing, rounded-6 verify."""
-    dim = _vec_dim(vectors, vec_col)
-    # r15: ONE bucketed frame, per-bucket numpy meet (ordered pairs),
-    # threshold + dedup on the 24-byte scored rows as before.
-    b = _md5_buckets(vectors, id_col, vec_col, "b", n_bits, n_tables, dim)
-    return (
-        _np_bucket_dots(None, b, same=True, ordered=True)
-        .select(
-            F.col("query_id").alias("id_a"),
-            F.col("cand_id").alias("id_b"),
-            _np_sim(6).alias("sim"),
-        )
-        .where(F.col("sim") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def lsh_pairs_above(
     vectors: DataFrame,
     threshold: float,
@@ -640,17 +531,19 @@ def lsh_pairs_above(
 ) -> DataFrame:
     """Approximate all-pairs cosine >= threshold: LSH-bucketed candidate
     generation + exact verify inside buckets — the sub-quadratic scale
-    path for embedding near-dup over a large corpus. Recall < 1 by
-    construction (tune n_tables); for the exact answer use
-    cosine_pairs_above. ``n_bits`` defaults to the corpus-size-derived
-    width (_auto_bits) so bucket occupancy stays bounded as N grows."""
+    path for embedding near-dup over a large corpus, on the same
+    cross-engine-exact bucketing as lsh_topk. Recall < 1 by construction
+    (tune n_tables); for the exact answer use cosine_pairs_above.
+    ``n_bits`` defaults to the corpus-size-derived width (_auto_bits) so
+    bucket occupancy stays bounded as N grows."""
     n_bits = _auto_bits(vectors, n_bits)
+    dim = _vec_dim(vectors, vec_col)
     # Score and threshold inside the bucket meet, then dedup the scored
     # 24-byte pairs — same result set (sim is per-pair deterministic),
     # but the dedup shuffle no longer carries the vectors, and the
-    # threshold filter shrinks it before it happens. r15: ONE bucketed
-    # frame + per-bucket numpy meet (_np_bucket_dots).
-    b = _with_buckets(vectors, id_col, vec_col, "b", n_bits, n_tables)
+    # threshold filter shrinks it before it happens. ONE bucketed frame
+    # + per-bucket numpy meet of ordered pairs (_np_bucket_dots).
+    b = _md5_buckets(vectors, id_col, vec_col, "b", n_bits, n_tables, dim)
     return (
         _np_bucket_dots(None, b, same=True, ordered=True)
         .select(
@@ -669,9 +562,9 @@ def mutual_knn_graph(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int | None = 6,
-    method: str = "lsh_md5",
+    method: str = "lsh",
     n_bits: int | None = None,
-    n_tables: int | None = None,
+    n_tables: int = 8,
 ) -> DataFrame:
     """Mutual-kNN graph over an embedding column: undirected edges
     ``(id_a, id_b, sim, rank_ab, rank_ba)`` where each endpoint is in
@@ -690,11 +583,10 @@ def mutual_knn_graph(
     brute force unconditionally, and its broadcast guard made the query
     REFUSE to run past 100k vectors):
 
-    - ``"lsh_md5"`` (default): LSH-bucketed candidates + exact
-      in-bucket re-rank on the cross-engine-exact md5 bucketing leg —
-      sub-quadratic, oracle-replayable (the catalog hash-verifies it).
-    - ``"lsh"``: the production xxhash64 bucketing with corpus-adaptive
-      bucket width (_auto_bits) — what a 100 TB run uses.
+    - ``"lsh"`` (default): lsh_topk — LSH-bucketed candidates + exact
+      in-bucket re-rank, sub-quadratic and oracle-replayable (the
+      catalog hash-verifies it); ``n_bits=None`` derives the bucket
+      width from the corpus size (_auto_bits).
     - ``"exact"``: brute_force_topk, still guarded by its
       max_broadcast_rows — the small-N oracle twin and recall baseline.
 
@@ -711,13 +603,7 @@ def mutual_knn_graph(
     elif method == "lsh":
         topk = lsh_topk(
             vectors, vectors, k=k, id_col=id_col, vec_col=vec_col,
-            n_bits=n_bits, n_tables=n_tables if n_tables is not None else 16,
-        )
-    elif method == "lsh_md5":
-        topk = lsh_topk_md5(
-            vectors, vectors, k=k, id_col=id_col, vec_col=vec_col,
-            n_bits=n_bits,  # None -> corpus-count-derived (_auto_bits)
-            n_tables=n_tables if n_tables is not None else 8,
+            n_bits=n_bits, n_tables=n_tables,
         )
     else:
         raise ValueError(f"mutual_knn_graph: unknown method {method!r}")

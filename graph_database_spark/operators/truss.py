@@ -63,7 +63,7 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 100) -> DataFrame:
         return keep
 
     core = fixpoint(
-        edges.select("src", "dst"), step, None, max_iterations, name="k_truss",
+        edges.select("src", "dst"), step, max_iterations, name="k_truss",
         probe=F.count(F.lit(1)),
         probe_done=lambda prev, cur: prev is not None and cur == prev,
         probe_seed=True,

@@ -50,6 +50,9 @@ __all__ = [
 ]
 
 _MANIFEST = "_ann_index.json"
+# The hyperplane family of operators/similarity._md5_sign_matrix; the
+# LSH manifest records it and probe_lsh_index refuses any other.
+_LSH_SIGN_FAMILY = "md5-parity"
 
 
 def build_ivf_index(
@@ -172,18 +175,18 @@ def build_lsh_index(
     shift bound) — written bucketed+sorted by ``tb``, so the probe-time
     equi-join reads the corpus side bucket-to-bucket with NO Exchange.
     The manifest records the hyperplane family parameters (n_bits,
-    n_tables, dim; signs are the deterministic xxhash64-parity family
-    of operators/similarity._sign_matrix, re-derived as plan literals
-    at probe time — KBs, never persisted with the data)."""
+    n_tables, dim, sign_family; the signs are the deterministic
+    md5-parity family of operators/similarity._md5_sign_matrix,
+    re-derived at probe time — KBs, never persisted with the data)."""
     from graph_database_spark.operators.similarity import (
         _auto_bits,
+        _md5_buckets,
         _vec_dim,
-        _with_buckets,
     )
 
     n_bits = _auto_bits(candidates, n_bits)
     dim = _vec_dim(candidates, vec_col)
-    cb = _with_buckets(candidates, id_col, vec_col, "b", n_bits, n_tables, dim)
+    cb = _md5_buckets(candidates, id_col, vec_col, "b", n_bits, n_tables, dim)
     assigned = cb.select(
         (F.col("table").cast("long") * (1 << n_bits) + F.col("bucket")).alias("tb"),
         F.col("idb").alias("vec_id"),
@@ -198,7 +201,7 @@ def build_lsh_index(
         "n_tables": n_tables,
         "dim": dim,
         "n_buckets": n_buckets,
-        "sign_family": "xxhash64-parity",
+        "sign_family": _LSH_SIGN_FAMILY,
     }
     _write_manifest(path, manifest)
     return manifest
@@ -217,12 +220,22 @@ def probe_lsh_index(
     (against the manifest-derived sign literals) and shuffles onto the
     index's ``tb`` buckets; pair dedup and the per-query top-k window
     run on scored 24-byte scalars, never vector payloads. Result parity
-    with the refit path (similarity.lsh_topk) is pytest-pinned."""
-    from graph_database_spark.operators.similarity import _pair_sim, _with_buckets
+    with the refit path (similarity.lsh_topk) is pytest-pinned.
+
+    Raises ValueError on an index whose manifest names another sign
+    family (one written by an older build): its buckets were cut by
+    other hyperplanes, and probing them with these signs would silently
+    miss candidates."""
+    from graph_database_spark.operators.similarity import _md5_buckets, _pair_sim
 
     m = _load_manifest(path)
     if m.get("kind") != "lsh":
         raise ValueError(f"index at {path} is kind={m.get('kind')!r}, not lsh")
+    if m.get("sign_family") != _LSH_SIGN_FAMILY:
+        raise ValueError(
+            f"index at {path} has sign_family={m.get('sign_family')!r}, "
+            f"not {_LSH_SIGN_FAMILY!r}; rebuild it with build_lsh_index"
+        )
     n_bits, n_tables, dim = m["n_bits"], m["n_tables"], m["dim"]
     cand = spark.table(m["table"]).select(
         "tb",
@@ -230,7 +243,7 @@ def probe_lsh_index(
         F.col("embedding").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    qb = _with_buckets(queries, id_col, vec_col, "a", n_bits, n_tables, dim).select(
+    qb = _md5_buckets(queries, id_col, vec_col, "a", n_bits, n_tables, dim).select(
         (F.col("table").cast("long") * (1 << n_bits) + F.col("bucket")).alias("tb"),
         "ida",
         "va",

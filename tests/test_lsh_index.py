@@ -76,3 +76,25 @@ def test_wrong_kind_raises(spark, tmp_path):
             probe_lsh_index(spark, str(tmp_path / "idx3"), emb, k=5)
     finally:
         spark.sql("DROP TABLE IF EXISTS ann_kind_idx")
+
+
+def test_other_sign_family_raises(spark, tmp_path):
+    """An index whose manifest names another hyperplane family (one
+    written with xxhash64-parity signs by an older build) must be
+    refused: probing it with md5-parity signs would silently miss."""
+    import json
+    import os
+
+    import pytest
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx4")
+    try:
+        m = build_lsh_index(emb, "ann_lsh_idx4", path, n_bits=4, n_tables=8)
+        assert m["sign_family"] == "md5-parity"
+        with open(os.path.join(path, "_ann_index.json"), "w") as f:
+            json.dump(dict(m, sign_family="xxhash64-parity"), f)
+        with pytest.raises(ValueError, match="sign_family"):
+            probe_lsh_index(spark, path, emb, k=5)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ann_lsh_idx4")

@@ -68,7 +68,7 @@ def test_mutual_knn_graph_symmetry_and_ranks(spark):
         "vec_id long, embedding array<float>",
     )
     # method="exact" pins the mutuality/rank semantics on a geometric
-    # fixture (the default lsh_md5 path is bucketed: on 3 near-random
+    # fixture (the default lsh path is bucketed: on 3 near-random
     # 2-d points candidate recall is not guaranteed).
     rows = mutual_knn_graph(vecs, k=1, method="exact").collect()
     assert len(rows) == 1
@@ -92,7 +92,7 @@ def test_mutual_knn_graph_lsh_md5_sims_are_exact(spark):
         base = [1.0, 0.0, 0.0] if i % 2 == 0 else [0.0, 1.0, 0.0]
         rows.append((i, [x + rng.uniform(-0.05, 0.05) for x in base]))
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = mutual_knn_graph(vecs, k=3, method="lsh_md5")
+    got = mutual_knn_graph(vecs, k=3, method="lsh")
     assert got.count() > 0
     from graph_database_spark.operators.similarity import brute_force_topk
 
@@ -397,7 +397,7 @@ def test_mutual_knn_lsh_recall_floor(spark):
     lsh = {
         (r["id_a"], r["id_b"])
         for r in mutual_knn_graph(
-            emb, k=10, method="lsh_md5", n_bits=4, n_tables=16
+            emb, k=10, method="lsh", n_bits=4, n_tables=16
         ).collect()
     }
     assert len(exact & lsh) / len(exact) >= 0.8
