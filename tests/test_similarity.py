@@ -70,6 +70,24 @@ def test_lsh_topk_recall(emb):
     assert first == run()
 
 
+def test_lsh_topk_md5_twin_recall_and_determinism(emb):
+    """The md5-parity leg at the explicit configuration its graph
+    callers pass (4 bits, 8 tables): recall@10 vs brute force clears
+    the same floor as at the defaults, and two runs are bit-identical."""
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    exact = S.brute_force_topk(queries, emb, k=10)
+    truth = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
+    run = lambda: sorted(
+        (r["query_id"], r["cand_id"], r["sim"], r["rank"])
+        for r in S.lsh_topk(queries, emb, k=10, n_bits=4, n_tables=8).collect()
+    )
+    first = run()
+    approx = {(q, c) for q, c, _, _ in first}
+    recall = len(truth & approx) / len(truth)
+    assert recall >= 0.6, f"recall@10 = {recall:.3f}"
+    assert first == run()
+
+
 def test_lsh_topk_string_ids(spark):
     """Buckets holding only queries or only candidates score to an
     empty group; that frame must carry the input's id type. With 256
