@@ -96,7 +96,7 @@ def _graph(spark, sf_dir):
     # self-join once instead of re-deriving it per branch. The vertex set
     # is checkpointed too: hypothesis_pct's numerator/denominator branches
     # each re-derive the member semi-join otherwise (12 pre-AQE Exchanges
-    # measured in PLANS.md r2; the checkpoint bounds it).
+    # measured in r2's plan dump; the checkpoint bounds it).
     edges = copurchase_edges(spark, sf_dir).localCheckpoint()
     return copurchase_vertices(spark, sf_dir, edges).localCheckpoint(), edges
 
@@ -3808,7 +3808,7 @@ def q_rich_club(spark, sf_dir):
     # broadcast: createDataFrame yields a LogicalRDD with UNKNOWN size
     # stats (defaultSizeInBytes = huge), so without the hint the
     # planner ran both theta-joins as un-broadcast CartesianProducts
-    # (caught by the r14 full-coverage PLANS.md sweep).
+    # (caught by the r14 full-catalog plan sweep).
     ks = F.broadcast(
         spark.createDataFrame([(4,), (8,), (16,), (32,)], "k int")
     )
@@ -6952,7 +6952,7 @@ def q_fk_integrity(spark, sf_dir):
     # for every foreign-key edge of the schema plus the events->customer
     # link — the data-quality gate a warehouse runs after every load.
     # r7 shipped 8 independent anti-join legs re-deriving their scans
-    # (32 pre-AQE Exchanges, the widest plan in PLANS.md — VERDICT r7
+    # (32 pre-AQE Exchanges, the widest plan in the catalog — VERDICT r7
     # wrong-#4). r8 folds all edges into ONE cogrouped pass: each table
     # is scanned once, children and parents union into (relation, key)
     # streams, existence comes from a single left join against the
@@ -9624,6 +9624,21 @@ def _md5_bucket_ctes(dim: int, n_bits: "int | str", n_tables: int) -> str:
     )"""
 
 
+def _pair_dots_cte(a: str, b: str) -> str:
+    # ``dots(a, b, dp)`` over the candidate pairs in ``cand(a, b, ...)``:
+    # one list_dot_product per pair over the DOUBLE[] embeddings. The
+    # unnest-both-sides-and-join-on-i form materialized dim rows per
+    # candidate pair and spilled past 20 GB at sf0.1 (2.56 M pairs).
+    return f"""
+    vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    dots AS (
+        SELECT c.{a}, c.{b}, list_dot_product(va.v, vb.v) AS dp
+        FROM cand c
+        JOIN vecs va ON va.vec_id = c.{a}
+        JOIN vecs vb ON vb.vec_id = c.{b}
+    )"""
+
+
 def _build_ann_lsh_md5_sql(
     dim: int = 64, n_bits: "int | str" = 6, n_tables: int = 8, k: int = 10
 ) -> str:
@@ -9638,13 +9653,7 @@ def _build_ann_lsh_md5_sql(
         JOIN buckets cb ON cb.tbl = qa.tbl AND cb.bucket = qa.bucket
         WHERE qa.vec_id % 50 = 0 AND qa.vec_id <> cb.vec_id
     ),
-    dots AS (
-        SELECT c.query_id, c.cand_id, sum(a.x * b.x) AS dp
-        FROM cand c
-        JOIN ex a ON a.vec_id = c.query_id
-        JOIN ex b ON b.vec_id = c.cand_id AND b.i = a.i
-        GROUP BY 1, 2
-    ),
+    {_pair_dots_cte("query_id", "cand_id")},
     scored AS (
         SELECT query_id, cand_id,
                round(dp / (na.nrm * nb.nrm), 6) AS sim
@@ -9676,13 +9685,7 @@ def _build_lsh_pairs_md5_sql(
         JOIN buckets b ON b.tbl = a.tbl AND b.bucket = a.bucket
         WHERE a.vec_id < b.vec_id
     ),
-    dots AS (
-        SELECT c.id_a, c.id_b, sum(a.x * b.x) AS dp
-        FROM cand c
-        JOIN ex a ON a.vec_id = c.id_a
-        JOIN ex b ON b.vec_id = c.id_b AND b.i = a.i
-        GROUP BY 1, 2
-    )
+    {_pair_dots_cte("id_a", "id_b")}
     SELECT id_a, id_b, round(dp / (na.nrm * nb.nrm), 6) AS sim
     FROM dots
     JOIN norms na ON na.vec_id = id_a
@@ -9706,13 +9709,7 @@ def _md5_all_topk_ctes(
         JOIN buckets cb ON cb.tbl = qa.tbl AND cb.bucket = qa.bucket
         WHERE qa.vec_id <> cb.vec_id
     ),
-    dots AS (
-        SELECT c.query_id, c.cand_id, sum(a.x * b.x) AS dp
-        FROM cand c
-        JOIN ex a ON a.vec_id = c.query_id
-        JOIN ex b ON b.vec_id = c.cand_id AND b.i = a.i
-        GROUP BY 1, 2
-    ),
+    {_pair_dots_cte("query_id", "cand_id")},
     scored AS (
         SELECT query_id, cand_id,
                round(dp / (na.nrm * nb.nrm), 6) AS sim
@@ -9797,13 +9794,7 @@ def _build_ann_ivf_md5_sql(
         FROM probe p JOIN cand_cell cc USING (cell)
         WHERE p.vec_id <> cc.vec_id
     ),
-    dots AS (
-        SELECT c.query_id, c.cand_id, sum(a.x * b.x) AS dp
-        FROM cand c
-        JOIN ex a ON a.vec_id = c.query_id
-        JOIN ex b ON b.vec_id = c.cand_id AND b.i = a.i
-        GROUP BY 1, 2
-    ),
+    {_pair_dots_cte("query_id", "cand_id")},
     scored AS (
         SELECT query_id, cand_id,
                round(dp / (na.nrm * nb.nrm), 6) AS sim

@@ -44,10 +44,11 @@ def plan_audit(df: DataFrame) -> dict:
     """Plan health summary for a DataFrame: ``{exchanges, scans,
     pushed_filters, has_cartesian, codegen_stages}``.
 
-    The library form of scripts/dump_plans.py — lets pipeline code
-    assert its own scale posture (e.g. `assert plan_audit(df)["exchanges"]
-    <= 2` in a test, or a pre-submit check that a new filter actually
-    reached the scan). Reads the AQE initial physical plan; at 100 TB
+    The catalog-wide plan-shape gate (tests/test_plan_shapes.py) counts
+    Exchanges with this, so library and gate share one counter. Lets
+    pipeline code assert its own scale posture (e.g. `assert
+    plan_audit(df)["exchanges"] <= 2` in a test, or a pre-submit check
+    that a new filter actually reached the scan). Reads the AQE initial physical plan; at 100 TB
     the same numbers are what the Spark UI's SQL tab would show
     pre-execution."""
     import re

@@ -37,28 +37,11 @@ def state_partitions(spark) -> int:
     return max(4, spark.sparkContext.defaultParallelism // 4)
 
 
-# Observability hook (r13, VERDICT r12 #4): when a list is assigned
-# here, materialize() appends the pre-AQE executed-plan string of every
-# frame it checkpoints. The iterative operators' per-round plans are
-# otherwise invisible to scripts/dump_plans.py (the loops run eagerly
-# inside the operator call), which is exactly where the r12 perf
-# regression hid. Costs nothing when None (the default); only
-# scripts/dump_plans.py sets it.
-PLAN_CAPTURE: list[str] | None = None
-
-
 def materialize(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Coalesce onto the state partition count and localCheckpoint —
     the per-round state hygiene every iterative operator needs."""
     if parts is None:
         parts = state_partitions(df.sparkSession)
-    if PLAN_CAPTURE is not None:
-        try:
-            PLAN_CAPTURE.append(
-                df._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception:
-            pass
     return df.coalesce(parts).localCheckpoint()
 
 
@@ -68,7 +51,6 @@ def fixpoint(
     max_iterations: int,
     name: str = "fixpoint",
     on_exhaust: str = "raise",
-    stats: dict | None = None,
     fuse: int = 1,
     probe: Column | None = None,
     probe_done: Callable[[object, object], bool] | None = None,
@@ -149,19 +131,8 @@ def fixpoint(
                 done = not val  # 0 or NULL == no row changed
             prev_val = val
         if done:
-            if stats is not None:
-                # observability hook (stress runs read this; no behavior
-                # change). Under fuse>1, "rounds" counts MATERIALIZATIONS
-                # (checkpoint jobs) and "steps" counts step() applications
-                # ((i+1)*fuse) — cross-round comparisons of convergence
-                # behavior must read "steps" (ADVICE r13).
-                stats.setdefault("rounds", {})[name] = i + 1
-                stats.setdefault("steps", {})[name] = (i + 1) * fuse
             return new
         state = new
-    if stats is not None:
-        stats.setdefault("rounds", {})[name] = max_iterations
-        stats.setdefault("steps", {})[name] = max_iterations * fuse
     if on_exhaust == "return":
         return state
     raise RuntimeError(

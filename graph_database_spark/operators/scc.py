@@ -72,7 +72,6 @@ def orient_md5(edges: DataFrame) -> DataFrame:
 
 def _hash_min(
     verts: DataFrame, edges: DataFrame, out_col: str, max_rounds: int, name: str,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Hash-min label fixpoint over DIRECTED edges ``(u, v)``: label(x) =
     min id among {x} + {sources of directed paths into x}. ``verts``
@@ -106,14 +105,13 @@ def _hash_min(
         )
 
     return fixpoint(
-        labels, step, max_rounds, name=name, stats=stats, fuse=3,
+        labels, step, max_rounds, name=name, fuse=3,
         probe=F.sum((F.col(out_col) != F.col("prev")).cast("long")),
     ).select("id", out_col)
 
 
 def scc_components(
     directed_edges: DataFrame, phases: int = 4, max_rounds: int = 16,
-    stats: dict | None = None,
 ) -> DataFrame:
     """``(id, scc_id)`` over directed edges ``(u, v)``; scc_id = the
     minimum vertex id in the component. Vertex universe = edge
@@ -137,7 +135,7 @@ def scc_components(
     for phase in range(phases):
         if not n_unresolved:
             break
-        f = _hash_min(verts, edges, "f", max_rounds, f"scc_fwd_p{phase}", stats)
+        f = _hash_min(verts, edges, "f", max_rounds, f"scc_fwd_p{phase}")
         # backward propagation stays inside a color class: keep only
         # edges whose endpoints share f, then flip direction.
         fu = f.select(F.col("id").alias("u"), F.col("f").alias("fu"))
@@ -148,7 +146,7 @@ def scc_components(
             .where(F.col("fu") == F.col("fv"))
             .select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        b = _hash_min(verts, ce, "b", max_rounds, f"scc_bwd_p{phase}", stats)
+        b = _hash_min(verts, ce, "b", max_rounds, f"scc_bwd_p{phase}")
         # ONE materialization per phase (r15): the joined (f, b) frame is
         # checkpointed with the unresolved count riding it; done/verts
         # are lazy filters over it (the old shape checkpointed resolved
@@ -168,8 +166,6 @@ def scc_components(
         )
         n_unresolved = obs.get["u"] or 0
         verts = fb.where(F.col("f") != F.col("b")).select("id")
-        if stats is not None:
-            stats["phases"] = phase + 1
         if not n_unresolved:
             # skip the edge prune for a phase that will never run
             break

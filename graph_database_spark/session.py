@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap default: half the host's physical RAM, capped at 16g.
+    local[N] runs executors inside the driver JVM, so its heap is the
+    engine's whole working memory; it must never exceed the host's RAM."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "graph-database-spark",
     master: str | None = None,
@@ -37,8 +45,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # local[N] runs everything in one JVM whose default 1g heap is far
-        # below this machine's RAM; only effective before JVM start.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # below the host's RAM; only effective before JVM start.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         # Keep catalog-table storage out of the working directory (bucketed
         # tables use explicit paths; this catches any default-path write).
         .config("spark.sql.warehouse.dir", os.environ.get(

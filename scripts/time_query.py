@@ -10,22 +10,16 @@ from __future__ import annotations
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 
 def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .appName("time_query")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     from graph_database_spark import catalog
+    from graph_database_spark.session import get_spark
+
+    spark = get_spark("time_query")
+    spark.sparkContext.setLogLevel("ERROR")
 
     fn = catalog.QUERIES[name]
     samples = []

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 
 from graph_database_spark.session import get_spark
@@ -13,15 +11,3 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
 
-
-@pytest.fixture(scope="session")
-def unbuildable_queries() -> dict[str, str]:
-    """Catalog queries the catalog-wide sweeps cannot build on this
-    checkout, by name with the reason: ``snap_metrics`` reads the
-    reference's SNAP ego networks, present only beside the reference
-    dataset (the directory the golden tests read)."""
-    from test_snap_golden import DATA
-
-    if Path(DATA).is_dir():
-        return {}
-    return {"snap_metrics": f"reference SNAP data absent ({DATA})"}
