@@ -43,7 +43,8 @@ def entry(spark: SparkSession) -> DataFrame:
 #       ONLY external visibility those production paths get.
 #   rotating slots (the remaining ~25):
 #     - oracle-backed queries ordered by last-externally-verified round
-#       (never-verified first, then oldest), ties broken by catalog order.
+#       (never-verified first, then oldest), ties broken by catalog order
+#       (the definition order of the q_* functions in catalog.py).
 #       "Externally verified" is read from the committed CORRECTNESS_r*.json
 #       artifacts at import time, so each new round's gate result
 #       automatically advances the rotation — no hand-editing.
@@ -63,24 +64,6 @@ _REFERENCE_SURFACE = [
     "clustering_coefficient",
     "feature_decode",
     "circles_membership",
-]
-
-# Pin history: km_* pinned r11 (VERDICT r10 #1), HUGEINT trio pinned
-# r12 (VERDICT r11 #1/#5), replan-regate quartet + nine r12-new queries
-# pinned r13 (VERDICT r12 #1/#2/#3). All RETIRED: CORRECTNESS_r13.json
-# shows every pinned name hash-green, each pin's stated unpin condition.
-#
-# r14 pins (VERDICT r13 #1): r13's flagship additions that have never
-# had a driver-gate row — newest code with zero external rows is the
-# riskiest tier (the HUGEINT saga started exactly there). Catalog order
-# is SECTION-based, not chronological, so the standing
-# least-recently-verified rotation cannot express "newest code first";
-# pin for one round instead. Unpin in r15 once green.
-_R14_NEWEST_GATE = [
-    "ann_ivfpq",
-    "ivfpq_recall_audit",
-    # added mid-r14: brand-new this round, gate it the same round
-    "ann_ivfpq_refined",
 ]
 
 
@@ -120,11 +103,7 @@ def _last_verified_rounds() -> dict[str, int]:
 def _ordered_names() -> list[str]:
     verified = _last_verified_rounds()
     order = {n: i for i, n in enumerate(catalog.QUERIES)}
-    reserved = [
-        n
-        for n in (*_REFERENCE_SURFACE, *_R14_NEWEST_GATE)
-        if n in catalog.QUERIES
-    ]
+    reserved = [n for n in _REFERENCE_SURFACE if n in catalog.QUERIES]
     rows_only = [
         n for n in catalog.QUERIES if n in catalog.ROWS_ONLY and n not in reserved
     ]

@@ -441,7 +441,7 @@ def q_snap_metrics(spark, sf_dir):
 
     out = None
     for ego in snap.EGO_CENTERS:
-        v, e, _ = snap.load_ego_network(spark, "/root/reference/data", ego)
+        v, e, _ = snap.load_ego_network(spark, snap.REFERENCE_DATA, ego)
         m = (
             node_count(e)
             .crossJoin(G.edge_count(e))
@@ -13675,9 +13675,6 @@ ORACLES["weighted_sample"] = """
     FROM keyed ORDER BY key_micro, doc_id LIMIT 50
 """
 
-# Rows-only operators: declared in QUERIES with no oracle entry — the
-# driver records the weaker rows-only check (custom/iterative algorithms:
-# LSH candidate generation, SimHash banding, sampled betweenness).
 def q_scc_components(spark, sf_dir):
     # Strongly connected components (r8, VERDICT r7 missing-#3): FW-BW
     # peeling with min-label coloring over the md5-parity orientation of
@@ -17900,435 +17897,6 @@ def q_logrank_test(spark, sf_dir):
         ).alias("lr_chi2"),
     )
 
-
-ROWS_ONLY = frozenset({
-    "pagerank",
-    "pagerank_personalized",
-    "embedding_pca",
-    "pagerank_weighted",
-    "ann_ivf",
-    "dedup_minhash",
-    "dedup_simhash",
-    "ngram_jaccard",
-    "snap_metrics",
-    "distinct_users_sketch",
-    "staged_dedup",
-    "text_embedding_neardup",
-    "compression_ratio",
-})
-
-QUERIES: dict[str, QueryFn] = {
-    "node_count": q_node_count,
-    "edge_count": q_edge_count,
-    "cooccurrence_pairs": q_cooccurrence_pairs,
-    "connected_pairs": q_connected_pairs,
-    "hypothesis_pct": q_hypothesis_pct,
-    "degree": q_degree,
-    "triangle_edges": q_triangle_edges,
-    "clustering_coefficient": q_clustering_coefficient,
-    "edge_embeddedness": q_edge_embeddedness,
-    "local_bridges": q_local_bridges,
-    "feature_decode": q_feature_decode,
-    "circles_membership": q_circles_membership,
-    "betweenness": q_betweenness,
-    "bfs_distances": q_bfs_distances,
-    "pagerank": q_pagerank,
-    "pagerank_personalized": q_pagerank_personalized,
-    "kcore": q_kcore,
-    "dedup_exact": q_dedup_exact,
-    "dedup_norm": q_dedup_norm,
-    "doc_fingerprint": q_doc_fingerprint,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "staged_dedup": q_staged_dedup,
-    "text_embedding_neardup": q_text_embedding_neardup,
-    "text_embedding_neardup_md5": q_text_embedding_neardup_md5,
-    "doc_chunks": q_doc_chunks,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "text_token_stats": q_text_token_stats,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "similarity_topk": q_similarity_topk,
-    "embedding_neardup": q_embedding_neardup,
-    "embedding_neardup_lsh": q_embedding_neardup_lsh,
-    "ann_lsh": q_ann_lsh,
-    "ann_lsh_md5": q_ann_lsh_md5,
-    "embedding_neardup_lsh_md5": q_embedding_neardup_lsh_md5,
-    "ann_ivf": q_ann_ivf,
-    "ann_ivf_md5": q_ann_ivf_md5,
-    "semdedup": q_semdedup,
-    "sssp_weighted": q_sssp_weighted,
-    "label_propagation": q_label_propagation,
-    "docs_hash_sample": q_docs_hash_sample,
-    "corpus_mixture": q_corpus_mixture,
-    "token_packing": q_token_packing,
-    "snap_metrics": q_snap_metrics,
-    "json_extract_events": q_json_extract_events,
-    "events_hourly": q_events_hourly,
-    "events_sessionize": q_events_sessionize,
-    "top3_orders": q_top3_orders,
-    "pricing_summary": q_pricing_summary,
-    "events_sliding_1h": q_events_sliding_1h,
-    "grouping_sets_orders": q_grouping_sets_orders,
-    "ntile_orders": q_ntile_orders,
-    "distinct_users_hll": q_distinct_users_hll,
-    "audience_overlap": q_audience_overlap,
-    "dp_order_stats": q_dp_order_stats,
-    "maximal_matching": q_maximal_matching,
-    "events_ohlc": q_events_ohlc,
-    "parts_skyline": q_parts_skyline,
-    "km_survival": q_km_survival,
-    "km_horizon_probe": q_km_horizon_probe,
-    "km_user_lifetimes": q_km_user_lifetimes,
-    "km_risk_table": q_km_risk_table,
-    "embedding_gram": q_embedding_gram,
-    "readability": q_readability,
-    "score_auc": q_score_auc,
-    "ab_test_welch": q_ab_test_welch,
-    "bleu_pairs": q_bleu_pairs,
-    "isotonic_calibration": q_isotonic_calibration,
-    "decision_stump": q_decision_stump,
-    "rouge_l": q_rouge_l,
-    "jaro_winkler": q_jaro_winkler,
-    "inclusion_deps": q_inclusion_deps,
-    "fd_violations": q_fd_violations,
-    "purchase_attribution": q_purchase_attribution,
-    "shipping_priority": q_shipping_priority,
-    "local_supplier_volume": q_local_supplier_volume,
-    "returned_items": q_returned_items,
-    "rollup_customers": q_rollup_customers,
-    "customers_without_orders": q_customers_without_orders,
-    "customers_intersect_eventusers": q_customers_intersect_eventusers,
-    "customers_minus_eventusers": q_customers_minus_eventusers,
-    "cube_orders": q_cube_orders,
-    "events_asof_order": q_events_asof_order,
-    "order_events_7d": q_order_events_7d,
-    "media_metadata": q_media_metadata,
-    "media_frames": q_media_frames,
-    "multimodal_features": q_multimodal_features,
-    "corpus_curation": q_corpus_curation,
-    "embedding_dedup_groups": q_embedding_dedup_groups,
-    "value_histogram": q_value_histogram,
-    "order_rank_stats": q_order_rank_stats,
-    "top_tokens_per_lang": q_top_tokens_per_lang,
-    "distinct_users_sketch": q_distinct_users_sketch,
-    "distinct_users_kmv": q_distinct_users_kmv,
-    "user_event_types": q_user_event_types,
-    "order_price_quantiles": q_order_price_quantiles,
-    "orders_pivot_year": q_orders_pivot_year,
-    "dedup_editdist_verify": q_dedup_editdist_verify,
-    "events_running_value": q_events_running_value,
-    "volume_shipping": q_volume_shipping,
-    "promo_revenue": q_promo_revenue,
-    "top_supplier": q_top_supplier,
-    "small_qty_revenue": q_small_qty_revenue,
-    "large_volume_customers": q_large_volume_customers,
-    "idle_rich_customers": q_idle_rich_customers,
-    "triangle_count": q_triangle_count,
-    "copurchase_components": q_copurchase_components,
-    "doc_repetition": q_doc_repetition,
-    "gopher_repetition": q_gopher_repetition,
-    "rag_chunks": q_rag_chunks,
-    "stratified_sample": q_stratified_sample,
-    "char_entropy": q_char_entropy,
-    "common_ngrams": q_common_ngrams,
-    "ngram_jaccard_exact": q_ngram_jaccard_exact,
-    "weighted_jaccard": q_weighted_jaccard,
-    "order_stats_ext": q_order_stats_ext,
-    "quality_rules": q_quality_rules,
-    "mixture_weights": q_mixture_weights,
-    "column_stats": q_column_stats,
-    "closeness_sampled": q_closeness_sampled,
-    "ktruss": q_ktruss,
-    "copurchase_strength": q_copurchase_strength,
-    "banded_revenue": q_banded_revenue,
-    "degree_histogram": q_degree_histogram,
-    "dataset_split": q_dataset_split,
-    "important_stock": q_important_stock,
-    "pagerank_weighted": q_pagerank_weighted,
-    "link_prediction": q_link_prediction,
-    "min_cost_supplier": q_min_cost_supplier,
-    "quality_dedup": q_quality_dedup,
-    "event_anomalies": q_event_anomalies,
-    "event_funnel": q_event_funnel,
-    "media_resize": q_media_resize,
-    "decontamination": q_decontamination,
-    "decontamination_bloom": q_decontamination_bloom,
-    "merkle_ranges": q_merkle_ranges,
-    "embedding_pca": q_embedding_pca,
-    "minhash_signatures": q_minhash_signatures,
-    "dedup_minhash_md5": q_dedup_minhash_md5,
-    "dedup_incremental": q_dedup_incremental,
-    "pagerank_quantized": q_pagerank_quantized,
-    "hits_scores": q_hits_scores,
-    "link_scores": q_link_scores,
-    "embedding_standardize": q_embedding_standardize,
-    "quantile_hist": q_quantile_hist,
-    "graph_drift": q_graph_drift,
-    "zipf_slope": q_zipf_slope,
-    "event_transitions": q_event_transitions,
-    "token_pmi": q_token_pmi,
-    "triad_census": q_triad_census,
-    "coreness": q_coreness,
-    "onion_layers": q_onion_layers,
-    "heaps_fit": q_heaps_fit,
-    "degree_powerlaw": q_degree_powerlaw,
-    "events_ewma": q_events_ewma,
-    "embedding_quantize": q_embedding_quantize,
-    "bloom_semijoin": q_bloom_semijoin,
-    "excess_suppliers": q_excess_suppliers,
-    "token_counts_cms": q_token_counts_cms,
-    "token_heavy_hitters": q_token_heavy_hitters,
-    "pagerank_weighted_quantized": q_pagerank_weighted_quantized,
-    "random_walks": q_random_walks,
-    "node2vec_walks": q_node2vec_walks,
-    "textrank_keywords": q_textrank_keywords,
-    "collocations_llr": q_collocations_llr,
-    "dedup_survivorship": q_dedup_survivorship,
-    "max_cover_seeds": q_max_cover_seeds,
-    "sprt_monitor": q_sprt_monitor,
-    "f2_ams": q_f2_ams,
-    "position_attribution": q_position_attribution,
-    "diff_in_diff": q_diff_in_diff,
-    "quantile_normalize": q_quantile_normalize,
-    "timedecay_attribution": q_timedecay_attribution,
-    "rectangle_count": q_rectangle_count,
-    "soundex_blocks": q_soundex_blocks,
-    "corpus_policy": q_corpus_policy,
-    "ucb_replay": q_ucb_replay,
-    "ols_price_model": q_ols_price_model,
-    "regression_discontinuity": q_regression_discontinuity,
-    "rolling_beta": q_rolling_beta,
-    "logistic_calibration": q_logistic_calibration,
-    "woe_iv": q_woe_iv,
-    "target_encoding": q_target_encoding,
-    "sorted_neighborhood": q_sorted_neighborhood,
-    "sequential_rules": q_sequential_rules,
-    "seasonal_decompose": q_seasonal_decompose,
-    "mase_backtest": q_mase_backtest,
-    "image_ahash": q_image_ahash,
-    "neyman_allocation": q_neyman_allocation,
-    "temperature_mixing": q_temperature_mixing,
-    "t_closeness": q_t_closeness,
-    "quantile_digest": q_quantile_digest,
-    "k_anonymity_audit": q_k_anonymity_audit,
-    "temporal_reachability": q_temporal_reachability,
-    "prf_search": q_prf_search,
-    "pit_features": q_pit_features,
-    "quantile_digest_read": q_quantile_digest_read,
-    "graph_mis": q_graph_mis,
-    "walk_skipgrams": q_walk_skipgrams,
-    "pagerank_personalized_quantized": q_pagerank_personalized_quantized,
-    "degree_assortativity": q_degree_assortativity,
-    "attribute_assortativity": q_attribute_assortativity,
-    "powerlaw_alpha": q_powerlaw_alpha,
-    "effective_diameter": q_effective_diameter,
-    "embedding_isotropy": q_embedding_isotropy,
-    "source_diversity": q_source_diversity,
-    "length_emd_matrix": q_length_emd_matrix,
-    "lsh_pair_prf": q_lsh_pair_prf,
-    "minhash_calibration": q_minhash_calibration,
-    "interarrival_fit": q_interarrival_fit,
-    "community_modularity": q_community_modularity,
-    "conductance": q_conductance,
-    "user_retention": q_user_retention,
-    "rich_club": q_rich_club,
-    "tfidf_terms": q_tfidf_terms,
-    "bm25_search": q_bm25_search,
-    "phrase_search": q_phrase_search,
-    "unigram_logprob": q_unigram_logprob,
-    "doc_kl_divergence": q_doc_kl_divergence,
-    "bigram_logprob": q_bigram_logprob,
-    "bpe_pair_counts": q_bpe_pair_counts,
-    "simhash_signatures": q_simhash_signatures,
-    "nation_market_share": q_nation_market_share,
-    "product_profit": q_product_profit,
-    "priority_waiting_orders": q_priority_waiting_orders,
-    "priority_line_counts": q_priority_line_counts,
-    "customer_distribution": q_customer_distribution,
-    "parts_supplier_counts": q_parts_supplier_counts,
-    "brand_quantity_revenue": q_brand_quantity_revenue,
-    "waiting_supplier_rank": q_waiting_supplier_rank,
-    "event_burstiness": q_event_burstiness,
-    "span_dedup": q_span_dedup,
-    "suffix_array_dedup": q_suffix_array_dedup,
-    "suffix_cross_doc": q_suffix_cross_doc,
-    "lof_outliers": q_lof_outliers,
-    "dbscan_customers": q_dbscan_customers,
-    "knn_graph": q_knn_graph,
-    "events_resample": q_events_resample,
-    "cumulative_users": q_cumulative_users,
-    "weighted_sample": q_weighted_sample,
-    "katz_centrality": q_katz_centrality,
-    "graph_global_stats": q_graph_global_stats,
-    "label_centroid_sim": q_label_centroid_sim,
-    "order_percentiles": q_order_percentiles,
-    "ngram_containment": q_ngram_containment,
-    "hybrid_search": q_hybrid_search,
-    "compression_ratio": q_compression_ratio,
-    "compression_stored_twin": q_compression_stored_twin,
-    "events_rolling_median": q_events_rolling_median,
-    "graph_coloring": q_graph_coloring,
-    "densest_subgraph": q_densest_subgraph,
-    "column_entropy": q_column_entropy,
-    "edge_betweenness": q_edge_betweenness,
-    "user_event_paths": q_user_event_paths,
-    "scd2_intervals": q_scd2_intervals,
-    "event_features": q_event_features,
-    "frequent_itemsets": q_frequent_itemsets,
-    "key_skew_profile": q_key_skew_profile,
-    "events_anomaly_mad": q_events_anomaly_mad,
-    "embedding_outliers": q_embedding_outliers,
-    "token_novelty": q_token_novelty,
-    "order_seasonality": q_order_seasonality,
-    "supplier_concentration": q_supplier_concentration,
-    "part_return_rate": q_part_return_rate,
-    "customer_value_deciles": q_customer_value_deciles,
-    # r7: real audio/video codec round-trips (operators/av.py)
-    "audio_features": q_audio_features,
-    "video_motion": q_video_motion,
-    # r7: PII hygiene layer (operators/pii.py)
-    "pii_scan": q_pii_scan,
-    "source_reputation": q_source_reputation,
-    # r7: tokenizer induction (operators/bpe.py)
-    "bpe_merges": q_bpe_merges,
-    "graph_diameter": q_graph_diameter,
-    "kmeans_cells": q_kmeans_cells,
-    "events_cusum": q_events_cusum,
-    "two_hop_reach": q_two_hop_reach,
-    "psi_drift": q_psi_drift,
-    "link_negative_samples": q_link_negative_samples,
-    "record_linkage": q_record_linkage,
-    "events_autocorr": q_events_autocorr,
-    "vocab_oov": q_vocab_oov,
-    "distinct_users_sliding": q_distinct_users_sliding,
-    "conversion_latency": q_conversion_latency,
-    "label_confusion": q_label_confusion,
-    "matryoshka_fidelity": q_matryoshka_fidelity,
-    "theil_sen_trend": q_theil_sen_trend,
-    "max_spanning_forest": q_max_spanning_forest,
-    "msf_clusters": q_msf_clusters,
-    "hyper_anf": q_hyper_anf,
-    "max_concurrency": q_max_concurrency,
-    "fk_integrity": q_fk_integrity,
-    "benford_prices": q_benford_prices,
-    "entity_resolution": q_entity_resolution,
-    "events_twap": q_events_twap,
-    "pq_codes": q_pq_codes,
-    "ann_ivfpq": q_ann_ivfpq,
-    "ivfpq_recall_audit": q_ivfpq_recall_audit,
-    "ann_ivfpq_refined": q_ann_ivfpq_refined,
-    "association_rules": q_association_rules,
-    "rfm_segments": q_rfm_segments,
-    "bootstrap_replicates": q_bootstrap_replicates,
-    "spend_gini": q_spend_gini,
-    "sequence_logloss": q_sequence_logloss,
-    "percolation": q_percolation,
-    "lorenz_curve": q_lorenz_curve,
-    "scc_components": q_scc_components,
-    "topo_layers": q_topo_layers,
-    "jaccard_prefix_join": q_jaccard_prefix_join,
-    "incremental_agg": q_incremental_agg,
-    "incremental_join": q_incremental_join,
-    "chi_square_events": q_chi_square_events,
-    "png_features": q_png_features,
-    "incremental_distinct": q_incremental_distinct,
-    "scc_reach": q_scc_reach,
-    "bpe_encode": q_bpe_encode,
-    "tokenizer_fertility": q_tokenizer_fertility,
-    "weighted_median": q_weighted_median,
-    "incremental_quantiles": q_incremental_quantiles,
-    "join_cardinality": q_join_cardinality,
-    "triangles_sampled": q_triangles_sampled,
-    "item_cf": q_item_cf,
-    "copurchase_projection": q_copurchase_projection,
-    "table_diff": q_table_diff,
-    "group_split": q_group_split,
-    "adpcm_features": q_adpcm_features,
-    "video_codec_features": q_video_codec_features,
-    "zorder_index": q_zorder_index,
-    "range_partition_plan": q_range_partition_plan,
-    "bitmap_intersections": q_bitmap_intersections,
-    "benford_audit": q_benford_audit,
-    "chi2_independence": q_chi2_independence,
-    "column_profile": q_column_profile,
-    "compaction_plan": q_compaction_plan,
-    "consistent_hash_rebalance": q_consistent_hash_rebalance,
-    "markov_2step": q_markov_2step,
-    "zonemap_pruning": q_zonemap_pruning,
-    "edge_reciprocity": q_edge_reciprocity,
-    "pareto_abc": q_pareto_abc,
-    "cuped_adjustment": q_cuped_adjustment,
-    "compaction_nextfit": q_compaction_nextfit,
-    "haar_orders": q_haar_orders,
-    "naive_bayes_lang": q_naive_bayes_lang,
-    "viterbi_paths": q_viterbi_paths,
-    "holt_linear": q_holt_linear,
-    "holt_winters": q_holt_winters,
-    "sax_symbols": q_sax_symbols,
-    "ndcg_eval": q_ndcg_eval,
-    "rake_keywords": q_rake_keywords,
-    "cdc_chunks": q_cdc_chunks,
-    "cdc_dedup": q_cdc_dedup,
-    "randomized_response": q_randomized_response,
-    "calibration_bins": q_calibration_bins,
-    "ks_drift": q_ks_drift,
-    "mannwhitney_test": q_mannwhitney_test,
-    "spearman_nation": q_spearman_nation,
-    "hilbert_index": q_hilbert_index,
-    "dsir_selection": q_dsir_selection,
-    "als_factors": q_als_factors,
-    "events_changepoint": q_events_changepoint,
-    "platt_scaling": q_platt_scaling,
-    "hashed_features": q_hashed_features,
-    "cologne_blocks": q_cologne_blocks,
-    "metaphone_blocks": q_metaphone_blocks,
-    "conformal_intervals": q_conformal_intervals,
-    "good_turing": q_good_turing,
-    "mg_heavy_hitters": q_mg_heavy_hitters,
-    "space_saving_hh": q_space_saving_hh,
-    "priority_sample": q_priority_sample,
-    "bh_fdr": q_bh_fdr,
-    "mmr_diversify": q_mmr_diversify,
-    "knn_label_noise": q_knn_label_noise,
-    "label_spreading": q_label_spreading,
-    "ann_recall_audit": q_ann_recall_audit,
-    "ivf_recall_audit": q_ivf_recall_audit,
-    "grouping_sets_revenue": q_grouping_sets_revenue,
-    "kcenter_coreset": q_kcenter_coreset,
-    "dedup_span_cuts": q_dedup_span_cuts,
-    "dedup_span_apply": q_dedup_span_apply,
-    "cohens_kappa": q_cohens_kappa,
-    "hopkins_statistic": q_hopkins_statistic,
-    "source_influence": q_source_influence,
-    "quantile_treatment_effect": q_quantile_treatment_effect,
-    "shapley_attribution": q_shapley_attribution,
-    "ipw_effect": q_ipw_effect,
-    "propensity_matching": q_propensity_matching,
-    "synthetic_control": q_synthetic_control,
-    "fellegi_sunter": q_fellegi_sunter,
-    "cmh_test": q_cmh_test,
-    "kfold_cv": q_kfold_cv,
-    "wl_refinement": q_wl_refinement,
-    "jl_projection": q_jl_projection,
-    "mrr_eval": q_mrr_eval,
-    "gram_power_iteration": q_gram_power_iteration,
-    "bm25_indexed": q_bm25_indexed,
-    "ransac_line": q_ransac_line,
-    "band_join_pairs": q_band_join_pairs,
-    "em_gmm": q_em_gmm,
-    "kneser_ney": q_kneser_ney,
-    "perplexity_filter": q_perplexity_filter,
-    "mutual_information": q_mutual_information,
-    "boosted_stumps": q_boosted_stumps,
-    "trimmed_mean": q_trimmed_mean,
-    "uplift_segments": q_uplift_segments,
-    "markov_attribution": q_markov_attribution,
-    "emd_drift": q_emd_drift,
-    "ar1_fit": q_ar1_fit,
-    "logrank_test": q_logrank_test,
-}
 
 # Split-invariance proof: the incrementally maintained registers must
 # estimate exactly what the one-shot full-table sketch does.
@@ -23949,5 +23517,14 @@ ORACLES["effective_diameter"] = ORACLES["effective_diameter"].replace(
 )
 
 
+# The registry is read off the module: each `q_<name>` function is the
+# query `<name>` (definition order), and a query without an ORACLES entry
+# is rows-only (the driver's weaker rows-only check).
+QUERIES: dict[str, QueryFn] = {
+    n[2:]: f for n, f in list(globals().items()) if n.startswith("q_")
+}
+ROWS_ONLY = frozenset(QUERIES) - ORACLES.keys()
+
+
 def oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in ORACLES.items() if k in QUERIES and v is not None}
+    return dict(ORACLES)

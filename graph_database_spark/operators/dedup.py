@@ -554,21 +554,28 @@ def simhash(text_col, bits: int = 64) -> Column:
     """64-bit SimHash of the token multiset, as BIGINT.
 
     bit i of the result = 1 iff sum over tokens of (2*bit_i(xxhash64(tok))-1)
-    is positive. Single pass over the token array: the accumulator is a
-    `bits`-slot counter array updated with zip_with — row-local,
-    shuffle-free, all codegen'd.
-
-    Bit tests use plain-int literal masks captured by closure (bit 63 via
-    the two's-complement sign) — F.shiftright inside a HOF lambda requires
-    a Python-int shift amount, and multi-parameter lambdas are reserved for
-    the HOF binder's (element, index) convention.
+    is positive. Single pass over the token array (``_simhash_fold``) —
+    row-local, shuffle-free, all codegen'd.
     """
-    hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
+    return _simhash_fold(F.transform(tokens(text_col), lambda t: F.xxhash64(t)), bits)
+
+
+def _simhash_fold(hashes: Column, bits: int) -> Column:
+    """SimHash bit vote over an array of BIGINT token hashes: bit i of the
+    result = 1 iff sum over the hashes of (2*bit_i(h)-1) is positive.
+
+    One `bits`-slot counter array updated with zip_with, then one mask-sum
+    assembly. Bit tests use plain-int literal masks captured by closure;
+    bit 63 is the two's-complement sign (`1 << 63` is no BIGINT literal).
+    F.shiftright inside a HOF lambda requires a Python-int shift amount,
+    and multi-parameter lambdas are reserved for the HOF binder's
+    (element, index) convention.
+    """
 
     def _bit_vec(h: Column) -> Column:
         terms = []
         for i in range(bits):
-            cond = (h < 0) if i == bits - 1 else (h.bitwiseAND(F.lit(1 << i)) != 0)
+            cond = (h < 0) if i == 63 else (h.bitwiseAND(F.lit(1 << i)) != 0)
             terms.append(F.when(cond, 1).otherwise(-1))
         return F.array(*terms)
 
@@ -740,26 +747,7 @@ def simhash_signatures_md5(
         F.col("toks"),
         lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"),
     )
-
-    def _bit_vec(h: Column) -> Column:
-        # 60-bit positive values: no sign-bit special case needed.
-        return F.array(
-            *[
-                F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)
-                for i in range(bits)
-            ]
-        )
-
-    sums = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, _bit_vec(h), lambda a, b: a + b),
-    )
-    masks = F.array(*[F.shiftleft(F.lit(1).cast("long"), i) for i in range(bits)])
-    signed = F.zip_with(
-        sums, masks, lambda s, m: F.when(s > 0, m).otherwise(F.lit(0).cast("long"))
-    )
-    sig = F.aggregate(signed, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    sig = _simhash_fold(hashes, bits)
     return t.select(F.col("id").alias(id_col), sig.alias("simhash"))
 
 

@@ -18,7 +18,9 @@ X: N`` lines the reference intended (format from src/main.js:115-119).
 
 Usage:
     python -m graph_database_spark.pipeline \
-        --data /root/reference/data --out /tmp/out [--egos 0,107] [--betweenness]
+        --out <dir> [--data <SNAP dir>] [--egos 0,107] [--betweenness]
+
+``--data`` defaults to the reference dataset (``snap.REFERENCE_DATA``).
 """
 
 from __future__ import annotations
@@ -60,7 +62,7 @@ def run_ego(spark, data_dir: str, out_dir: str, ego: str, with_betweenness: bool
 
 def main(argv=None) -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    p.add_argument("--data", default="/root/reference/data")
+    p.add_argument("--data", default=snap.REFERENCE_DATA)
     p.add_argument("--out", required=True)
     p.add_argument("--egos", default=",".join(snap.EGO_CENTERS))
     p.add_argument("--betweenness", action="store_true")

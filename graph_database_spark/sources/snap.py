@@ -30,6 +30,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 EGO_CENTERS = ("0", "107", "348", "414", "686", "698", "1684", "1912", "3437", "3980")
 
+# The reference dataset (read-only): the ten SNAP ego networks under
+# ``data/`` and the reference pipeline's golden files under ``output/``.
+REFERENCE_DIR = "/root/reference"
+REFERENCE_DATA = f"{REFERENCE_DIR}/data"
+REFERENCE_OUTPUT = f"{REFERENCE_DIR}/output"
+
 
 def _read_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path).where(F.length(F.trim("value")) > 0)

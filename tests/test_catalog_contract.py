@@ -1,8 +1,9 @@
 """Driver-contract guards: catalog wiring + oracle SQL validity.
 
 These catch contract mistakes in seconds that otherwise only surface in
-the minutes-long correctness gate: a query declared without an oracle or
-rows-only marker, an oracle for a nonexistent query, or oracle SQL that
+the minutes-long correctness gate: a query added without an oracle (it
+would grow the rows-only set), an oracle for a nonexistent query, a
+reordered ``queries()`` rotation, or oracle SQL that
 DuckDB cannot even bind (EXPLAIN against the real sf0.001 tables — no
 execution, so the whole catalog checks in a few seconds).
 """
@@ -19,25 +20,39 @@ from graph_database_spark import catalog
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_every_query_is_oracled_or_rows_only():
-    missing = [
-        name
-        for name in catalog.QUERIES
-        if catalog.ORACLES.get(name) is None and name not in catalog.ROWS_ONLY
-    ]
-    assert not missing, f"queries with neither oracle nor ROWS_ONLY: {missing}"
+def test_rows_only_set_only_shrinks():
+    # A query is rows-only exactly when it has no ORACLES entry, so a new
+    # query added without an oracle grows this set and fails here by name.
+    assert len(catalog.ROWS_ONLY) <= 13, (
+        f"rows-only set grew to {len(catalog.ROWS_ONLY)}: {sorted(catalog.ROWS_ONLY)}"
+    )
 
 
 def test_rows_only_and_oracles_reference_real_queries():
-    assert catalog.ROWS_ONLY <= set(catalog.QUERIES)
     stray = set(catalog.ORACLES) - set(catalog.QUERIES)
     assert not stray, f"oracles without a queries() entry: {stray}"
 
 
-def test_rows_only_queries_carry_no_oracle():
-    # A query in both sets would silently downgrade the driver's check.
-    both = {n for n in catalog.ROWS_ONLY if catalog.ORACLES.get(n) is not None}
-    assert not both, f"ROWS_ONLY queries that also have oracles: {both}"
+def test_queries_rotation_policy():
+    """``queries()`` order: the reference surface, then every rows-only
+    query, then the rest by last externally verified round (catalog order
+    on ties) — the driver's head-50 window rotates itself."""
+    import __spark_entry__ as entry
+
+    names = list(entry.queries())
+    assert len(names) == len(catalog.QUERIES)
+    assert set(names) == set(catalog.QUERIES)
+
+    ref = entry._REFERENCE_SURFACE
+    rows_only = [n for n in catalog.QUERIES if n in catalog.ROWS_ONLY and n not in ref]
+    head = len(ref) + len(rows_only)
+    assert names[: len(ref)] == ref
+    assert names[len(ref) : head] == rows_only
+
+    verified = entry._last_verified_rounds()
+    order = {n: i for i, n in enumerate(catalog.QUERIES)}
+    keys = [(verified.get(n, -1), order[n]) for n in names[head:]]
+    assert keys == sorted(keys)
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata absent")

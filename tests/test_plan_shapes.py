@@ -58,6 +58,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from graph_database_spark import catalog
 from graph_database_spark.engine import plan_audit
+from graph_database_spark.sources.snap import REFERENCE_DATA
 
 SF_DIR = "/root/testdata/sf0.001"
 BASELINE = Path(__file__).resolve().parent / "plan_shapes.json"
@@ -103,11 +104,9 @@ def unbuildable_queries() -> dict[str, str]:
     with the reason: ``snap_metrics`` reads the reference's SNAP ego
     networks, present only beside the reference dataset (the directory
     the golden tests read)."""
-    from test_snap_golden import DATA
-
-    if Path(DATA).is_dir():
+    if Path(REFERENCE_DATA).is_dir():
         return {}
-    return {"snap_metrics": f"reference SNAP data absent ({DATA})"}
+    return {"snap_metrics": f"reference SNAP data absent ({REFERENCE_DATA})"}
 
 
 def _unpartitioned_windows(jplan, out, depth=0):

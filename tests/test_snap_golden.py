@@ -1,6 +1,7 @@
 """Golden replication of the reference pipeline (SURVEY.md §5.2-5.3).
 
-Loads the SNAP ego networks from /root/reference/data (read-only) through
+Loads the SNAP ego networks from the reference dataset
+(``snap.REFERENCE_DATA``, read-only) through
 sources/snap.py and checks the SAME operators used on the co-purchase
 graph reproduce the reference's golden outputs bit-exactly:
 output/{0,107}.proofs, output/{0,107}.metrics (1,367 clustering
@@ -16,8 +17,8 @@ from graph_database_spark.operators import graph as G
 from graph_database_spark.sinks.text import js_num, write_metrics, write_proofs
 from graph_database_spark.sources import snap
 
-DATA = "/root/reference/data"
-GOLD = "/root/reference/output"
+DATA = snap.REFERENCE_DATA
+GOLD = snap.REFERENCE_OUTPUT
 
 # SURVEY.md §5.2: (ego, nodes, edges, num, denom) — 0 and 107 are golden,
 # the rest are pinned replication results.
