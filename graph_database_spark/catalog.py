@@ -366,9 +366,10 @@ def q_text_embedding_neardup_md5(spark, sf_dir):
 
 
 def q_staged_dedup(spark, sf_dir):
-    # Rows-only (the near-dup tier is hash-based): the staged production
-    # pipeline — normalized-fingerprint collapse, then MinHash components
-    # over the survivors. Semantics pinned by tests/test_dedup.py.
+    # Rows-only (the oracle would need a recursive-CTE components step):
+    # the staged production pipeline — normalized-fingerprint collapse,
+    # then MinHash components over the survivors. Semantics pinned by
+    # tests/test_dedup.py; its pair stage is dedup_minhash's.
     return D.staged_dedup(load_table(spark, sf_dir, "documents"), threshold=0.3)
 
 
@@ -3635,17 +3636,17 @@ def q_copurchase_components(spark, sf_dir):
 
 
 def q_minhash_signatures(spark, sf_dir):
-    # Cross-engine MinHash verification: md5-derived permutations that
-    # DuckDB reproduces bit-for-bit — pins the MinHash math itself (the
-    # xxhash64 production path is JVM-only and pytest-pinned).
+    # Cross-engine MinHash verification: the md5-derived permutations
+    # every MinHash operator uses, which DuckDB reproduces bit-for-bit —
+    # pins the MinHash math itself.
     return D.minhash_signatures_md5(load_table(spark, sf_dir, "documents"))
 
 
 def q_dedup_minhash_md5(spark, sf_dir):
-    # Banded-LSH pairs over the md5 signature family — the oracle-checked
-    # twin of dedup_minhash's band/bucket/score plan (same shape, every
-    # hash cross-engine reproducible).
-    return D.minhash_lsh_pairs_md5(load_table(spark, sf_dir, "documents"))
+    # The same banded-LSH pair builder as dedup_minhash at 4 bands of 4
+    # rows (dedup_minhash: 8 of 2) and est >= 0.5 — the configuration
+    # dedup_incremental, minhash_calibration and lsh_pair_prf share.
+    return D.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), bands=4)
 
 
 def q_dedup_incremental(spark, sf_dir):
@@ -5428,10 +5429,9 @@ def q_mixture_weights(spark, sf_dir):
 
 
 def q_ngram_jaccard_exact(spark, sf_dir):
-    # The hash-verified exact twin of the rows-only LSH-pruned
-    # ngram_jaccard: inverted-index candidates guarantee completeness,
-    # so this pins the Jaccard math AND cross-validates the LSH
-    # variant's output (same 25 pairs at sf0.01).
+    # The exact twin of the LSH-pruned ngram_jaccard: inverted-index
+    # candidates guarantee completeness, so this pins the true pair set
+    # the LSH variant's recall is measured against (lsh_pair_prf).
     return D.ngram_jaccard_exact_pairs(load_table(spark, sf_dir, "documents"))
 
 
@@ -5443,7 +5443,7 @@ def q_minhash_calibration(spark, sf_dir):
     # corpus (lsh_pair_prf scores the decisions; this scores the
     # estimator itself). Exact leg bounded by the candidate pair set.
     docs = load_table(spark, sf_dir, "documents").localCheckpoint()
-    pred = D.minhash_lsh_pairs_md5(docs).select(
+    pred = D.minhash_lsh_pairs(docs, bands=4).select(
         "id_a", "id_b", F.expr("CAST(round(est_jaccard * 16) AS BIGINT)")
         .alias("est_16")
     )
@@ -5486,7 +5486,7 @@ def q_lsh_pair_prf(spark, sf_dir):
     # hash-verified; this pins their intersection. Zero denominators
     # guarded (empty pair sets read 0).
     docs = load_table(spark, sf_dir, "documents").localCheckpoint()
-    pred = D.minhash_lsh_pairs_md5(docs).select(
+    pred = D.minhash_lsh_pairs(docs, bands=4).select(
         "id_a", "id_b"
     ).localCheckpoint()  # census + hit join both read it
     truth = D.ngram_jaccard_exact_pairs(docs, threshold=0.5).select(
@@ -8962,8 +8962,11 @@ ORACLES["idle_rich_customers"] = """
       AND NOT EXISTS (SELECT 1 FROM events e WHERE e.user_id = c.c_custkey)
     GROUP BY 1
 """
-ORACLES["minhash_signatures"] = f"""
-    WITH toks AS (
+# md5 MinHash signatures over 16 seeds, as CTEs shared by every MinHash
+# oracle: sigrow (doc_id, seed, mh) and sig (doc_id, sig list) — the SQL
+# mirror of dedup._md5_sig.
+_DUCK_MINHASH_CTES = f"""
+    toks AS (
         SELECT doc_id, {_DUCK_TOKENS} AS t
         FROM documents
     ),
@@ -8978,12 +8981,75 @@ ORACLES["minhash_signatures"] = f"""
         -- concat_ws on an empty array is '' — the fallback must match
         SELECT doc_id, coalesce(array_to_string(t, ' '), '') AS s
         FROM toks WHERE len(t) < 3
+    ),
+    sigrow AS (
+        SELECT doc_id, seed,
+               min(CAST(('0x' || substring(md5(CAST(seed AS VARCHAR) || '|' || s),
+                                           1, 15)) AS BIGINT)) AS mh
+        FROM sh, UNNEST(range(0, 16)) AS v(seed)
+        GROUP BY 1, 2
+    ),
+    sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM sigrow GROUP BY 1)
+"""
+
+
+def _build_minhash_pairs_sql(bands: int, threshold: float) -> str:
+    """Oracle of ``dedup.minhash_lsh_pairs`` at 16 hashes in ``bands``
+    bands: every pair sharing a band key, est_jaccard >= threshold."""
+    rows = 16 // bands
+    return f"""
+    WITH {_DUCK_MINHASH_CTES},
+    banded AS (
+        SELECT doc_id, sig, band,
+               array_to_string(list_transform(sig[band*{rows}+1:band*{rows}+{rows}],
+                                              x -> CAST(x AS VARCHAR)), ',') AS bkey
+        FROM sig, UNNEST(range(0, {bands})) AS u(band)
+    ),
+    pairs AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(list_sum(list_transform(generate_series(1, 16),
+                    i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END))
+                    AS DOUBLE) / 16 AS est_jaccard
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
     )
-    SELECT doc_id, CAST(seed AS INTEGER) AS seed,
-           min(CAST(('0x' || substring(md5(CAST(seed AS VARCHAR) || '|' || s),
-                                       1, 15)) AS BIGINT)) AS minhash
-    FROM sh, UNNEST(range(0, 16)) AS v(seed)
-    GROUP BY 1, 2
+    SELECT id_a, id_b, est_jaccard FROM pairs
+    WHERE est_jaccard >= CAST({threshold} AS DOUBLE)
+"""
+
+
+ORACLES["minhash_signatures"] = f"""
+    WITH {_DUCK_MINHASH_CTES}
+    SELECT doc_id, CAST(seed AS INTEGER) AS seed, mh AS minhash
+    FROM sigrow
+"""
+ORACLES["dedup_minhash"] = _build_minhash_pairs_sql(bands=8, threshold=0.3)
+# ngram_jaccard_pairs at threshold 0.3: MinHash candidates at est >= 0.1
+# (threshold - candidate_margin), verified by exact Jaccard over the
+# distinct shingle sets, short-doc fallback included (_shingles_from).
+ORACLES["ngram_jaccard"] = f"""
+    WITH cand AS ({_build_minhash_pairs_sql(bands=8, threshold=0.1)}),
+    tk AS (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents),
+    sets AS (
+        SELECT doc_id,
+               CASE WHEN len(t) >= 3 THEN
+                   list_distinct(list_transform(
+                       generate_series(1, len(t) - 2),
+                       i -> array_to_string(t[i:i+2], ' ')))
+               ELSE [coalesce(array_to_string(t, ' '), '')] END AS s
+        FROM tk
+    ),
+    j AS (
+        SELECT c.id_a, c.id_b,
+               len(list_intersect(sa.s, sb.s)) AS ni,
+               len(sa.s) AS na, len(sb.s) AS nb
+        FROM cand c
+        JOIN sets sa ON sa.doc_id = c.id_a
+        JOIN sets sb ON sb.doc_id = c.id_b
+    )
+    SELECT id_a, id_b, CAST(ni AS DOUBLE) / (na + nb - ni) AS jaccard
+    FROM j
+    WHERE CAST(ni AS DOUBLE) / (na + nb - ni) >= CAST(0.3 AS DOUBLE)
 """
 def _betweenness_core_parts(levels: int = 12, num_sources: int = 32):
     # Unrolled multi-source BFS + dependency accumulation mirroring
@@ -11007,72 +11073,13 @@ ORACLES["events_ewma"] = """
                / 1000000.0 AS ewma
     FROM wv
 """
-ORACLES["dedup_minhash_md5"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS t
-        FROM documents
-    ),
-    sh AS (
-        -- mirrors _shingles_from incl. the short-doc fallback: docs with
-        -- < 3 tokens contribute ONE whole-text shingle, not zero rows
-        SELECT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-        WHERE len(t) >= 3
-        UNION ALL
-        -- coalesce: DuckDB array_to_string([]) is NULL, Spark's
-        -- concat_ws on an empty array is '' — the fallback must match
-        SELECT doc_id, coalesce(array_to_string(t, ' '), '') AS s
-        FROM toks WHERE len(t) < 3
-    ),
-    sigrow AS (
-        SELECT doc_id, seed,
-               min(CAST(('0x' || substring(md5(CAST(seed AS VARCHAR) || '|' || s),
-                                           1, 15)) AS BIGINT)) AS mh
-        FROM sh, UNNEST(range(0, 16)) AS v(seed)
-        GROUP BY 1, 2
-    ),
-    sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM sigrow GROUP BY 1),
-    banded AS (
-        SELECT doc_id, sig, band,
-               array_to_string(list_transform(sig[band*4+1:band*4+4],
-                                              x -> CAST(x AS VARCHAR)), ',') AS bkey
-        FROM sig, UNNEST(range(0, 4)) AS u(band)
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(list_sum(list_transform(generate_series(1, 16),
-                    i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END))
-                    AS DOUBLE) / 16 AS est_jaccard
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b, est_jaccard FROM pairs WHERE est_jaccard >= 0.5
-"""
+ORACLES["dedup_minhash_md5"] = _build_minhash_pairs_sql(bands=4, threshold=0.5)
 # Append-equals-rerun contract: the oracle reruns the FULL banding over
 # corpus UNION batch from scratch (nothing incremental), applies the
 # "corpus before batch, then smaller id" order, and must hash-match the
 # incremental probe — same md5 signature fragments as dedup_minhash_md5.
 ORACLES["dedup_incremental"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-        WHERE len(t) >= 3
-        UNION ALL
-        SELECT doc_id, coalesce(array_to_string(t, ' '), '') AS s
-        FROM toks WHERE len(t) < 3
-    ),
-    sigrow AS (
-        SELECT doc_id, seed,
-               min(CAST(('0x' || substring(md5(CAST(seed AS VARCHAR) || '|' || s),
-                                           1, 15)) AS BIGINT)) AS mh
-        FROM sh, UNNEST(range(0, 16)) AS v(seed)
-        GROUP BY 1, 2
-    ),
-    sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM sigrow GROUP BY 1),
+    WITH {_DUCK_MINHASH_CTES},
     banded AS (
         SELECT doc_id, sig, band,
                array_to_string(list_transform(sig[band*4+1:band*4+4],
@@ -23439,7 +23446,7 @@ LIMIT 50
 
 
 ORACLES["lsh_pair_prf"] = f"""
-    WITH pred0 AS ({ORACLES["dedup_minhash_md5"]}),
+    WITH pred0 AS ({_build_minhash_pairs_sql(bands=4, threshold=0.5)}),
     truth0 AS ({ORACLES["ngram_jaccard_exact"]}),
     pred AS (SELECT id_a, id_b FROM pred0),
     truth AS (SELECT id_a, id_b FROM truth0),
@@ -23465,7 +23472,7 @@ ORACLES["lsh_pair_prf"] = f"""
 
 
 ORACLES["minhash_calibration"] = f"""
-    WITH pred0 AS ({ORACLES["dedup_minhash_md5"]}),
+    WITH pred0 AS ({_build_minhash_pairs_sql(bands=4, threshold=0.5)}),
     pred AS (
         SELECT id_a, id_b,
                CAST(round(est_jaccard * 16) AS BIGINT) AS est_16

@@ -3,18 +3,19 @@
 Five tiers, in increasing fuzziness:
   exact_dedup         hash-groupBy on the raw text          (oracle: yes)
   normalized_dedup    md5 of normalized text                (oracle: yes)
-  minhash_lsh_pairs   MinHash + banded LSH candidate pairs  (rows-only)
+  minhash_lsh_pairs   md5 MinHash + banded LSH pairs        (oracle: yes)
   simhash_pairs       64-bit SimHash + banded hamming pairs (rows-only)
-  ngram_jaccard_pairs exact Jaccard on LSH candidates       (rows-only)
+  ngram_jaccard_pairs exact Jaccard on LSH candidates       (oracle: yes)
 
 Scale posture: every tier is one or two shuffles.
   - exact/normalized: a single groupBy on the key (map-side combinable).
-  - MinHash: signatures are computed per-row with JVM higher-order
-    functions (no explode of shingles, no Python), then ONE shuffle on
-    (band_idx, band_hash) buckets, then pair generation inside buckets.
-    Bucket sizes are bounded by collision probability, so the pair join
-    never degenerates; at 100 TB the band shuffle is the only wide stage
-    and it is uniformly keyed by hash.
+  - MinHash: one hash family, md5-derived, so DuckDB replays every
+    signature and pair. Signatures are computed per-row with JVM
+    higher-order functions (no explode of shingles, no Python), then ONE
+    shuffle on the band-prefixed bucket key, then pair generation inside
+    buckets. Bucket sizes are bounded by collision probability, so the
+    pair join never degenerates; at 100 TB the band shuffle is the only
+    wide stage and it is uniformly keyed by hash.
   - SimHash: signature per-row (64 aggregate expressions over the token
     hash array, all codegen'd), banded into 4x16-bit chunks for the
     candidate join, exact hamming <= k filter via xor + bit_count.
@@ -30,7 +31,6 @@ from graph_database_spark.operators.spread import spread
 __all__ = [
     "exact_dedup",
     "normalized_dedup",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "simhash",
     "simhash_pairs",
@@ -90,13 +90,6 @@ def _shingles_from(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def _shingles(text_col, k: int = 3) -> Column:
-    """Shingles straight from a text expression — convenience for tests /
-    one-shot use; hot paths must go through a tokens column +
-    ``_shingles_from`` (see that docstring)."""
-    return _shingles_from(tokens(text_col), k)
-
-
 def _tokens_df(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, toks) with tokenization materialized (spread + checkpoint) —
     the shared front of every shingle-based operator."""
@@ -108,13 +101,18 @@ def _tokens_df(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
 _LONG_MAX = (1 << 63) - 1
 
 
-def minhash_signature_from_tokens(toks: Column, num_perm: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature from a tokens column: ARRAY<BIGINT>[num_perm].
+def _md5_sig(toks: DataFrame, n_hashes: int, shingle_k: int) -> DataFrame:
+    """MinHash signatures ``(id, sig)``, ``sig`` an ARRAY<BIGINT>[n_hashes],
+    from a materialized ``(id, toks)`` frame: the one MinHash hash family,
+    shared by every signature, index and pair builder below.
 
-    Permutation j is simulated by seeding xxhash64 with j — the standard
-    one-hash-family trick. The whole signature is computed row-local in a
-    SINGLE pass over the shingle array: the accumulator is a num_perm-slot
-    array updated with elementwise least(). Nothing leaves the JVM.
+    Permutation j hashes a shingle s to the first 15 hex digits of
+    md5("<j>|<s>") read as a 60-bit integer. Any engine reproduces that,
+    so DuckDB replays the signatures (the ``minhash_signatures`` oracle)
+    and every pair set built on them. The signature is ONE row-local
+    fold over the shingle array: an n_hashes-slot accumulator updated
+    with elementwise least(). No explode, no shuffle, nothing leaves the
+    JVM; duplicate shingles need no dedup (min is idempotent).
 
     NB the per-permutation hash MUST capture j as a plain Python int via a
     closure built outside any HOF lambda: a `lambda s, j=j:` two-parameter
@@ -122,7 +120,6 @@ def minhash_signature_from_tokens(toks: Column, num_perm: int = 64, shingle_k: i
     silently binding j to the array-index column and collapsing all
     signature positions to the same value.
     """
-    sh = _shingles_from(toks, shingle_k)
 
     def _hashes(s: Column) -> Column:
         # One independent seeded hash per permutation. (A cheaper
@@ -130,42 +127,21 @@ def minhash_signature_from_tokens(toks: Column, num_perm: int = 64, shingle_k: i
         # the argmin over shingles is then nearly the same shingle for
         # every j, correlating signature positions and inflating the
         # Jaccard estimate ~30x in false-positive pairs.)
-        return F.array(*[F.xxhash64(F.lit(j), s) for j in range(num_perm)])
-
-    return F.aggregate(
-        sh,
-        F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_perm),
-        lambda acc, s: F.zip_with(acc, _hashes(s), lambda a, b: F.least(a, b)),
-    )
-
-
-def _md5_sig_wide(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int,
-    shingle_k: int,
-) -> DataFrame:
-    """Wide md5 MinHash frame ``(id, h0..h{n-1})`` — the single source of
-    the cross-engine hash family shared by ``minhash_signatures_md5``
-    (math pin) and ``minhash_lsh_pairs_md5`` (banding pin); a drift
-    between the two would silently break the documented verification
-    chain, so there is exactly one implementation."""
-    t = _tokens_df(docs, text_col, id_col)
-    sh = t.select(
-        "id", F.explode(_shingles_from(F.col("toks"), shingle_k)).alias("s")
-    )
-    aggs = [
-        F.min(
+        return F.array(*[
             F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{j}|"), F.col("s"))), 1, 15),
-                16,
-                10,
+                F.substring(F.md5(F.concat(F.lit(f"{j}|"), s)), 1, 15), 16, 10
             ).cast("long")
-        ).alias(f"h{j}")
-        for j in range(n_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
+            for j in range(n_hashes)
+        ])
+
+    return toks.select(
+        "id",
+        F.aggregate(
+            _shingles_from(F.col("toks"), shingle_k),
+            F.array_repeat(F.lit(_LONG_MAX).cast("long"), n_hashes),
+            lambda acc, s: F.zip_with(acc, _hashes(s), lambda a, b: F.least(a, b)),
+        ).alias("sig"),
+    )
 
 
 def minhash_signatures_md5(
@@ -175,66 +151,28 @@ def minhash_signatures_md5(
     n_hashes: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Cross-engine-checkable MinHash: ``(doc_id, seed, minhash)`` rows.
+    """MinHash signatures in long form: ``(doc_id, seed, minhash)`` rows.
 
-    The production path (minhash_signature_from_tokens) seeds xxhash64 —
-    a JVM-only function, so its signatures can only be pytest-pinned.
-    This twin derives each permutation from md5 (seed-prefixed, first 15
-    hex chars as a 60-bit integer), which ANY engine reproduces exactly;
-    the catalog's `minhash_signatures` query hashes it against DuckDB —
-    the oracle that pins the MinHash MATH itself, complementing
-    ngram_jaccard_exact (which pins the candidate PAIR SET). ~7x slower
-    per hash than xxhash64, hence a verification surface, not the
-    production default.
+    The catalog's `minhash_signatures` query hashes these against DuckDB:
+    the oracle that pins the MinHash MATH itself, beside
+    ``ngram_jaccard_exact`` (the true PAIR SET) and ``dedup_minhash``
+    (banding + estimator).
 
-    Plan: tokens checkpointed once (spread off the single-file scan),
-    shingles exploded, one map-side-combinable groupBy computing all
-    ``n_hashes`` mins in a single pass, then an unpivot (stack) to long
-    form. Duplicate shingles need no dedup — min is idempotent.
+    Plan: tokens checkpointed once (spread off the single-file scan), the
+    row-local signature fold, then posexplode to long form. No shuffle.
     """
-    sig = _md5_sig_wide(docs, text_col, id_col, n_hashes, shingle_k)
-    stack_args = ", ".join(f"{j}, h{j}" for j in range(n_hashes))
-    return sig.selectExpr(
-        f"id AS {id_col}",
-        f"stack({n_hashes}, {stack_args}) AS (seed, minhash)",
+    sig = _md5_sig(_tokens_df(docs, text_col, id_col), n_hashes, shingle_k)
+    return sig.select(
+        F.col("id").alias(id_col), F.posexplode("sig").alias("seed", "minhash")
     )
 
 
-def minhash_index_md5(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
+def _band_index(
+    toks: DataFrame, n_hashes: int, bands: int, shingle_k: int
 ) -> DataFrame:
-    """Banded MinHash signature index ``(id, sig, band, key)`` — the
-    persistable corpus-side artifact of the LSH dedup pipeline (one row
-    per document per band; ``sig`` is the n_hashes-long md5 signature
-    the estimator reads, ``key`` the band's bucket key).
-
-    This is the frame a 100 TB pipeline WRITES once per corpus (bucketed
-    by ``key``) and appends to: ``minhash_lsh_pairs_md5`` derives
-    its candidate join from it, and ``incremental_minhash_dedup`` probes
-    a NEW batch against it without touching corpus texts — probe cost
-    scales with the batch, not the corpus. ``key`` is band-PREFIXED
-    ("<band>|<row values>") so every bucket join is a SINGLE-column
-    equality: since Spark 3.3 EnsureRequirements demands co-partitioning
-    on ALL join keys, a (band, key) two-column join against a
-    key-bucketed table re-shuffles the index side ("Bucketed: false,
-    disabled by query planner" — measured r13); the packed key is the
-    same tb-packing discipline sinks/ann.build_lsh_index uses.
-    Checkpointed: every consumer joins it at least twice (self-join or
-    probe + readout)."""
+    """``minhash_index_md5`` rows from a materialized ``(id, toks)`` frame."""
     rows = n_hashes // bands
-    sig = (
-        _md5_sig_wide(docs, text_col, id_col, n_hashes, shingle_k)
-        .select(
-            "id",
-            F.array(*[F.col(f"h{j}") for j in range(n_hashes)]).alias("sig"),
-        )
-        .localCheckpoint()
-    )
+    sig = _md5_sig(toks, n_hashes, shingle_k).localCheckpoint()
     return sig.select(
         "id",
         "sig",
@@ -258,6 +196,36 @@ def minhash_index_md5(
             )
         ).alias("bk"),
     ).select("id", "sig", "bk.band", "bk.key")
+
+
+def minhash_index_md5(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_hashes: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """Banded MinHash signature index ``(id, sig, band, key)`` — the
+    persistable corpus-side artifact of the LSH dedup pipeline (one row
+    per document per band; ``sig`` is the n_hashes-long md5 signature
+    the estimator reads, ``key`` the band's bucket key).
+
+    This is the frame a 100 TB pipeline WRITES once per corpus (bucketed
+    by ``key``) and appends to: ``minhash_lsh_pairs`` derives its
+    candidate join from the same banding, and
+    ``incremental_minhash_dedup`` probes a NEW batch against it without
+    touching corpus texts — probe cost scales with the batch, not the
+    corpus. ``key`` is band-PREFIXED
+    ("<band>|<row values>") so every bucket join is a SINGLE-column
+    equality: since Spark 3.3 EnsureRequirements demands co-partitioning
+    on ALL join keys, a (band, key) two-column join against a
+    key-bucketed table re-shuffles the index side ("Bucketed: false,
+    disabled by query planner" — measured r13); the packed key is the
+    same tb-packing discipline sinks/ann.build_lsh_index uses.
+    Checkpointed: every consumer joins it at least twice (self-join or
+    probe + readout)."""
+    return _band_index(_tokens_df(docs, text_col, id_col), n_hashes, bands, shingle_k)
 
 
 def _sig_agreement(n_hashes: int):
@@ -367,35 +335,42 @@ def incremental_minhash_dedup(
     )
 
 
-def minhash_lsh_pairs_md5(
+def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_hashes: int = 16,
-    bands: int = 4,
+    bands: int = 8,
     shingle_k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Banded-LSH near-dup pairs from the MD5 signature family:
+    """Candidate near-dup pairs via banded MinHash LSH:
     ``(id_a, id_b, est_jaccard)`` with id_a < id_b, est >= threshold.
 
-    Completes the cross-engine verification chain for the LSH pipeline:
-    ``minhash_signatures`` pins the hash/min MATH, ``ngram_jaccard_exact``
-    pins the true PAIR SET, and this pins the BANDING + estimator — the
-    same band/bucket/score plan shape as the xxhash64 production path
-    (``minhash_lsh_pairs``), value-hash-checked against DuckDB because
-    every hash is md5-derived. est_jaccard = k/n_hashes is a dyadic
-    rational for n_hashes=16, so the double compares exactly.
+    est_jaccard = fraction of agreeing signature positions (the unbiased
+    MinHash estimator); k/n_hashes is a dyadic rational for n_hashes=16,
+    so the double compares exactly. Every hash is md5-derived, so DuckDB
+    replays the whole pipeline: ``minhash_signatures`` pins the hash/min
+    MATH, ``ngram_jaccard_exact`` the true PAIR SET, and
+    ``dedup_minhash`` (16 x 8) / ``dedup_minhash_md5`` (16 x 4) this
+    BANDING + estimator. 16 hashes in 8 bands of 2 rows finds the same
+    pairs at sf0.01 and sf0.1 as the 64 x 16 xxhash64 leg it replaced
+    (SCALE.md "One MinHash family").
 
-    Plan (the SCALE.md payload rule applied): signatures checkpointed
-    once; ONE (band, key) shuffle carrying the 16-long signature
-    (128 bytes — the scalar-sized payload, not the text); the estimator
-    is computed INSIDE the bucket join so the dedup shuffles only scored
-    scalar rows.
+    Plan (the SCALE.md payload rule applied): tokens and signatures
+    checkpointed once; ONE bucket-key shuffle carrying the 16-long
+    signature (128 bytes — the scalar-sized payload, not the text); the
+    estimator is computed INSIDE the bucket join so the dedup shuffles
+    only scored scalar rows.
     """
-    banded = minhash_index_md5(
-        docs, text_col, id_col, n_hashes, bands, shingle_k
-    )
+    toks = _tokens_df(docs, text_col, id_col)
+    return _minhash_pairs(toks, n_hashes, bands, shingle_k, threshold)
+
+
+def _minhash_pairs(
+    toks: DataFrame, n_hashes: int, bands: int, shingle_k: int, threshold: float
+) -> DataFrame:
+    banded = _band_index(toks, n_hashes, bands, shingle_k)
     a, b = banded.alias("a"), banded.alias("b")
     est = _sig_agreement(n_hashes)
     return (
@@ -411,86 +386,6 @@ def minhash_lsh_pairs_md5(
         )
         .filter(F.col("est_jaccard") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def minhash_signature(text_col, num_perm: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature straight from a text expression (convenience /
-    tests; hot paths tokenize into a column first — see _shingles_from)."""
-    return minhash_signature_from_tokens(tokens(text_col), num_perm, shingle_k)
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash LSH:
-    ``(id_a, id_b, est_jaccard)`` with id_a < id_b, est >= threshold.
-
-    est_jaccard = fraction of agreeing signature positions (the unbiased
-    MinHash estimator)."""
-    toks = _tokens_df(docs, text_col, id_col)
-    return _minhash_pairs_from_tokens(toks, num_perm, bands, shingle_k, threshold)
-
-
-def _minhash_pairs_from_tokens(
-    toks: DataFrame, num_perm: int, bands: int, shingle_k: int, threshold: float
-) -> DataFrame:
-    rows_per_band = num_perm // bands
-    # Signatures are materialized ONCE (localCheckpoint): the banded
-    # self-join and the verify join would otherwise each recompute the
-    # full shingle+hash pipeline per side. A signature is num_perm longs
-    # per doc — tiny relative to the text it summarizes — so this is the
-    # node-local state you'd cache at any scale.
-    sig = toks.select(
-        "id",
-        minhash_signature_from_tokens(F.col("toks"), num_perm, shingle_k).alias("sig"),
-    ).localCheckpoint()
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(",", F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ))
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = cand.join(
-        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.select("id_a", "id_b", (agree / F.lit(float(num_perm))).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
     )
 
 
@@ -732,8 +627,7 @@ def simhash_signatures_md5(
 ) -> DataFrame:
     """Cross-engine-checkable SimHash: ``(doc_id, simhash)`` with the
     per-token hash = first 60 bits of md5 — the verification twin of
-    ``simhash`` exactly as minhash_signatures_md5 is of the xxhash64
-    MinHash: any engine reproduces it, so the catalog query pins the
+    ``simhash``: any engine reproduces it, so the catalog query pins the
     bit-vote math (sign of the per-bit +/-1 sum over the token
     MULTISET) against DuckDB. 16 bits keeps the oracle tractable; the
     production simhash stays 64-bit xxhash64.
@@ -805,8 +699,8 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.5,
-    num_perm: int = 64,
-    bands: int = 16,
+    n_hashes: int = 16,
+    bands: int = 8,
     candidate_margin: float = 0.2,
 ) -> DataFrame:
     """Exact n-gram Jaccard over LSH candidate pairs:
@@ -817,13 +711,14 @@ def ngram_jaccard_pairs(
     still row-local per candidate pair.
 
     The candidate stage keeps pairs with MinHash-estimated Jaccard >=
-    threshold - candidate_margin (the estimator's std at 64 perms is
-    ~0.06, so the default margin is >3 sigma below the target — on a
-    duplicate-heavy corpus this caps bucket fan-out instead of dragging
-    every band collision into the exact-verify join)."""
+    threshold - candidate_margin. The estimator's std at 16 hashes is
+    sqrt(J(1-J)/16), at most 0.125, so the default margin sits at least
+    1.6 sigma below the target. On a duplicate-heavy corpus the cut caps
+    bucket fan-out instead of dragging every band collision into the
+    exact-verify join."""
     toks = _tokens_df(docs, text_col, id_col)
-    cand = _minhash_pairs_from_tokens(
-        toks, num_perm, bands, shingle_k, max(0.0, threshold - candidate_margin)
+    cand = _minhash_pairs(
+        toks, n_hashes, bands, shingle_k, max(0.0, threshold - candidate_margin)
     ).select("id_a", "id_b")
     sh = toks.select(
         "id", F.array_distinct(_shingles_from(F.col("toks"), shingle_k)).alias("sh")
@@ -840,6 +735,34 @@ def ngram_jaccard_pairs(
             (inter.cast("double") / union).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _shared_shingle_counts(
+    docs: DataFrame, text_col: str, id_col: str, shingle_k: int
+) -> DataFrame:
+    """``(id_a, id_b, na, nb, inter)`` for every pair id_a < id_b sharing
+    at least one distinct k-shingle: ``inter`` = shared shingles, na/nb =
+    each side's distinct-shingle count. Docs shorter than ``shingle_k``
+    tokens have no k-shingle and take no part. One self-join of the
+    inverted index on the shingle key, grouped by pair."""
+    toks = _tokens_df(docs, text_col, id_col)
+    inv = (
+        toks.where(F.size("toks") >= shingle_k)
+        .select(
+            "id",
+            F.array_distinct(_shingles_from(F.col("toks"), shingle_k)).alias("sh"),
+        )
+        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("g"))
+    )
+    return (
+        inv.toDF("id_a", "na", "g")
+        .join(inv.toDF("id_b", "nb", "g"), "g")
+        .where(F.col("id_a") < F.col("id_b"))
+        # na/nb are functionally dependent on the ids; grouping on them
+        # keeps them available without a join-back.
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(F.count("*").alias("inter"))
     )
 
 
@@ -875,24 +798,7 @@ def ngram_jaccard_exact_pairs(
     re-joined both full shingle ARRAYS per pair — at ~50 shingles/doc
     that shuffled ~100 strings per candidate and re-intersected them,
     2.1x slower at sf0.1 with identical output.)"""
-    toks = _tokens_df(docs, text_col, id_col)
-    inv = (
-        toks.where(F.size("toks") >= shingle_k)
-        .select(
-            "id",
-            F.array_distinct(_shingles_from(F.col("toks"), shingle_k)).alias("sh"),
-        )
-        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("g"))
-    )
-    pairs = (
-        inv.toDF("id_a", "na", "g")
-        .join(inv.toDF("id_b", "nb", "g"), "g")
-        .where(F.col("id_a") < F.col("id_b"))
-        # na/nb are functionally dependent on the ids; grouping on them
-        # keeps them available without a join-back.
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count("*").alias("inter"))
-    )
+    pairs = _shared_shingle_counts(docs, text_col, id_col, shingle_k)
     union = F.col("na") + F.col("nb") - F.col("inter")
     return (
         pairs.select(
@@ -1136,8 +1042,7 @@ def duplicate_span_coverage(
     starts only — worst case n x the duplicated-span count, nothing at
     all on a clean corpus — followed by one distinct-count per doc.
     The md5 key keeps the operator deterministic and oracle-checkable
-    (DuckDB computes the identical key); a throughput build would swap
-    xxhash64 in, exactly like the minhash md5/xxhash twin pair."""
+    (DuckDB computes the identical key), like the MinHash family."""
     toks = spread(docs).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("t")
     )
@@ -1213,26 +1118,11 @@ def ngram_containment_pairs(
     decontamination actually wants. Pairs kept when EITHER direction
     reaches ``threshold``.
 
-    Identical scalar-only plan to the Jaccard twin (dedup.py:661-670):
+    Same scalar-only plan as the Jaccard twin (``_shared_shingle_counts``):
     the intersection size is the count of shared inverted-index entries;
     each side's distinct-shingle count rides the index rows, so no
     shingle arrays are ever shuffled or re-intersected."""
-    toks = _tokens_df(docs, text_col, id_col)
-    inv = (
-        toks.where(F.size("toks") >= shingle_k)
-        .select(
-            "id",
-            F.array_distinct(_shingles_from(F.col("toks"), shingle_k)).alias("sh"),
-        )
-        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("g"))
-    )
-    pairs = (
-        inv.toDF("id_a", "na", "g")
-        .join(inv.toDF("id_b", "nb", "g"), "g")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count("*").alias("inter"))
-    )
+    pairs = _shared_shingle_counts(docs, text_col, id_col, shingle_k)
     cont_a = F.col("inter").cast("double") / F.col("na").cast("double")
     cont_b = F.col("inter").cast("double") / F.col("nb").cast("double")
     return (

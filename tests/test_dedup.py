@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
-from pyspark.sql import functions as F
 
 from graph_database_spark.operators import dedup as D
 
@@ -39,12 +41,46 @@ def test_normalized_dedup_collapses_punctuation(docs):
     assert rows[3] == rows[4] == 1
 
 
+def _signatures(docs, **kw):
+    sig = {}
+    for r in D.minhash_signatures_md5(docs, **kw).collect():
+        sig.setdefault(r["doc_id"], {})[r["seed"]] = r["minhash"]
+    return {d: [by_seed[j] for j in sorted(by_seed)] for d, by_seed in sig.items()}
+
+
 def test_minhash_signature_positions_differ(docs):
     """Regression for the HOF (element, index) lambda-binding bug: all
     signature positions used to collapse to one value."""
-    sig = docs.select(D.minhash_signature(F.col("text")).alias("s")).first()["s"]
-    assert len(sig) == 64
-    assert len(set(sig)) > 32
+    sig = _signatures(docs)[1]
+    assert len(sig) == 16
+    assert len(set(sig)) > 8
+
+
+def _py_minhash(text, n_hashes=16, k=3):
+    """Python reference of dedup._md5_sig: normalize, tokenize, k-word
+    shingles (whole-text fallback below k tokens), per seed j the min of
+    int(md5("<j>|<shingle>")[:15], 16)."""
+    toks = [t for t in re.sub(r"[^a-z0-9 ]", "", text.lower()).split(" ") if t]
+    shingles = (
+        [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+        if len(toks) >= k else [" ".join(toks)]
+    )
+    return [
+        min(int(hashlib.md5(f"{j}|{s}".encode()).hexdigest()[:15], 16) for s in shingles)
+        for j in range(n_hashes)
+    ]
+
+
+def test_minhash_signatures_match_python_md5(docs, spark):
+    """The row-local signature fold equals a hashlib reference on every
+    fixture doc, plus a short doc (< 3 tokens) and an empty one that take
+    the whole-text fallback shingle."""
+    extra = spark.createDataFrame(
+        [(6, "Hello, world"), (7, "!!!")], "doc_id long, text string"
+    )
+    got = _signatures(docs.unionByName(extra))
+    want = {d: _py_minhash(t) for d, t in DOCS + [(6, "Hello, world"), (7, "!!!")]}
+    assert got == want
 
 
 def test_minhash_lsh_finds_planted_pairs(docs):

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from graph_database_spark.operators.dedup import (
     incremental_minhash_dedup,
     minhash_index_md5,
-    minhash_lsh_pairs_md5,
+    minhash_lsh_pairs,
 )
 
 
@@ -55,7 +55,7 @@ def test_decisions_match_full_rerun(spark):
     # decisions under the corpus-first-then-id order.
     union_pairs = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_md5(corpus.unionByName(batch)).collect()
+        for r in minhash_lsh_pairs(corpus.unionByName(batch), bands=4).collect()
     }
     for d, (cd, bd, kept) in got.items():
         cds = {a for (a, b) in union_pairs if b == d and a in (1, 3)}

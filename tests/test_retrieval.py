@@ -85,9 +85,9 @@ def test_md5_lsh_pairs_match_production_shape(spark):
         "doc_id long, text string",
     )
     # bands=8 (2 rows/band): at this toy's jaccard (~0.76, 9/16 signature
-    # positions agree) the default 4x4 banding deterministically misses —
-    # 0.76^4 per band is a coin toss; 2-row bands make recall near-certain.
-    pairs = D.minhash_lsh_pairs_md5(docs, bands=8).collect()
+    # positions agree) a 4x4 banding deterministically misses — 0.76^4
+    # per band is a coin toss; 2-row bands make recall near-certain.
+    pairs = D.minhash_lsh_pairs(docs, bands=8).collect()
     found = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs}
     assert (1, 2) in found
     assert found[(1, 2)] >= 0.5
