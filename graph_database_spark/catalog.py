@@ -3008,15 +3008,14 @@ def q_token_packing(spark, sf_dir):
 
 
 def q_ann_ivf_md5(spark, sf_dir):
-    # Hash-verified twin of ann_ivf: md5-ordered centroid draw + integer
-    # micro-unit cell assignment make the inverted-file machinery
-    # (model draw -> assignment -> probe ranking -> in-cell re-rank)
-    # order-exact cross-engine; production ann_ivf keeps xxhash64.
-    from graph_database_spark.operators.ivf import ivf_topk_md5
+    # ann_ivf with its configuration spelled out (16 centroids, 4 probed
+    # cells), kept under its own name because queries() lists it; the
+    # md5-ordered draw + integer micro-unit cells are the only IVF family.
+    from graph_database_spark.operators.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return ivf_topk_md5(queries, emb, k=10, n_centroids=16, n_probe=4)
+    return ivf_topk(queries, emb, k=10, n_centroids=16, n_probe=4)
 
 
 def q_ivf_recall_audit(spark, sf_dir):
@@ -3024,14 +3023,14 @@ def q_ivf_recall_audit(spark, sf_dir):
     # probe (16 centroids, 4 probed cells) vs exact brute force on the
     # same query sample — the two audits together price the LSH-vs-IVF
     # tradeoff on live data instead of folklore.
-    from graph_database_spark.operators.ivf import ivf_topk_md5
+    from graph_database_spark.operators.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     true_tk = S.brute_force_topk(queries, emb, k=10).select(
         "query_id", "cand_id"
     )
-    appr = ivf_topk_md5(
+    appr = ivf_topk(
         queries, emb, k=10, n_centroids=16, n_probe=4
     ).select("query_id", "cand_id")
     t = true_tk.groupBy("query_id").agg(F.count("*").alias("n_true"))
@@ -3189,8 +3188,9 @@ def q_grouping_sets_revenue(spark, sf_dir):
 
 
 def q_ann_ivf(spark, sf_dir):
-    # Rows-only: IVF-cell ANN (data-adaptive counterpart of ann_lsh);
-    # recall floor vs brute force pinned by tests/test_ivf.py.
+    # IVF-cell ANN (data-adaptive counterpart of ann_lsh) at the default
+    # 16 centroids / 4 probes, hash-verified by the same oracle as
+    # ann_ivf_md5; recall floor vs brute force pinned by tests/test_ivf.py.
     from graph_database_spark.operators.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -9795,13 +9795,14 @@ def _md5_all_topk_ctes(
 def _build_ann_ivf_md5_sql(
     n_centroids: int = 16, n_probe: int = 4, k: int = 10
 ) -> str:
-    # Mirrors operators/ivf.ivf_topk_md5: md5-ordered centroid draw;
+    # Mirrors operators/ivf.ivf_topk: md5-ordered centroid draw;
     # nrm via list_sum(list_transform(...)) — LIST-ORDER sequential
     # summation matching Python's sum() over the same elements, with
     # IEEE sqrt/divide exact in both; integer micro-unit cell sims;
     # candidate cell = argmax with FIRST-index tiebreak (s DESC, c ASC);
     # probe cells from reverse(array_sort(struct(s,c))) = (s DESC,
-    # c DESC); rounded-6 re-rank.
+    # c DESC); double re-rank (list_dot_product over DOUBLE[], as
+    # similarity._pair_sim casts before multiplying) rounded to 6.
     return f"""
     WITH ex AS (
         SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -10003,6 +10004,7 @@ ORACLES["embedding_neardup_lsh"] = _build_lsh_pairs_md5_sql(
     n_bits=_AUTO_BITS_SQL, n_tables=16
 )
 ORACLES["ann_ivf_md5"] = _build_ann_ivf_md5_sql()
+ORACLES["ann_ivf"] = _build_ann_ivf_md5_sql()
 ORACLES["doc_chunks"] = f"""
     WITH toks AS (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents),
     c AS (

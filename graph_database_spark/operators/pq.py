@@ -23,6 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_database_spark.operators.ivf import (
+    _best_cell,
+    _micro_sims,
+    _probe_cells,
+    _unit_centroid_micro,
+)
 from graph_database_spark.operators.rank import global_rank
 from graph_database_spark.operators.spread import spread
 
@@ -372,8 +378,8 @@ def ivfpq_topk_md5(
     integer (micro-unit squared distances), so the whole pipeline
     (IVF draw + residual + PQ training + ADC ranking) hash-verifies
     against the composed DuckDB oracle (catalog._build_ann_ivfpq_sql),
-    extending the md5-twin chain that already pins ivf cells
-    (ann_ivf_md5) and PQ training (pq_codes) to their composition.
+    extending the chain that already pins ivf cells (ann_ivf) and PQ
+    training (pq_codes) to their composition.
 
     Plan: PQ codebook and IVF centroids are bounded model parameters
     (broadcast / literal); per-query ADC tables are
@@ -399,109 +405,6 @@ def ivfpq_topk_md5(
     )
     qtab = _adc_qtab(probe, q_pex, model["cmn"], model["codebook"])
     return _adc_rank(pairs, qtab, k)
-
-
-def _micro_sims(
-    vectors: DataFrame, cents: list, id_col: str, vec_col: str
-) -> DataFrame:
-    """``(vid, sims)`` — exact integer micro dot products of every
-    vector against the (driver-side) unit centroid micro list, as ONE
-    array column (the ivf_topk_md5 integer cell machinery).
-
-    r14 optimization round: the dot products run as one numpy matmul
-    per Arrow batch (``mapInArrow``) instead of n_centroids
-    aggregate/zip_with HOFs per row — HOFs evaluate INTERPRETED outside
-    whole-stage codegen (the SCALE.md r14 packed-assign rejection), and
-    the old shape re-ran all of them once per downstream consumer.
-    Exactness: integer-valued float64 dot products are exact below 2^53
-    partial sums (|xm|,|cm| <= ~2.1e6 micro units and d <= 1024 keeps
-    max |partial| < 2^52); an int64 fallback guards the bound anyway.
-    The output is checkpointed: cand/probe cells both derive from it."""
-    import numpy as np
-
-    from graph_database_spark.operators.spread import spread
-
-    C = np.asarray(cents, dtype=np.int64)  # (n_centroids, d)
-    cmax = int(np.abs(C).max()) if C.size else 0
-    n_cent, d = C.shape
-    id_type = vectors.schema[id_col].dataType.simpleString()
-
-    def fn(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            m = b.num_rows
-            if m == 0:
-                continue
-            vid = b.column(0)
-            flat = (
-                b.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            if flat.size != m * d:
-                raise ValueError(
-                    f"ivf sims: ragged vectors ({flat.size} values for "
-                    f"{m} x {d})"
-                )
-            X = flat.reshape(m, d)
-            xmax = int(np.abs(X).max())
-            if max(xmax, cmax, 1) ** 2 * d < 2**52:
-                S = (X.astype(np.float64) @ C.T.astype(np.float64)).astype(
-                    np.int64
-                )
-            else:
-                S = X @ C.T
-            offs = pa.array(
-                np.arange(0, (m + 1) * n_cent, n_cent, dtype=np.int32)
-            )
-            sims = pa.ListArray.from_arrays(
-                offs, pa.array(S.reshape(-1), type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays([vid, sims], ["vid", "sims"])
-
-    packed = spread(vectors).select(
-        F.col(id_col).alias("vid"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast(
-                "long"
-            ),
-        ).alias("xs"),
-    )
-    return packed.mapInArrow(
-        fn, f"vid {id_type}, sims array<long>"
-    ).localCheckpoint()
-
-
-def _probe_cells(simmed: DataFrame, n_probe: int) -> DataFrame:
-    """``(query_id, cell)`` — top-``n_probe`` cells by (sim DESC,
-    cell DESC), 1-based, mirroring the ann_ivf_md5 oracle's
-    reverse(array_sort(struct(s, c))) order."""
-    # Lazy on purpose (r14): a narrow per-row transform over the
-    # CHECKPOINTED simmed frame — consumers re-derive it for pennies,
-    # so its own checkpoint job was pure fixed overhead.
-    return (
-        simmed.select(
-            F.col("vid").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.expr(
-                            "array_sort(transform(sims,"
-                            " (s, c) -> struct(s AS s, c AS c)))"
-                        )
-                    ),
-                    1,
-                    n_probe,
-                )
-            ).alias("pc"),
-        )
-        .select(
-            "query_id", (F.col("pc.c") + 1).cast("int").alias("cell")
-        )
-    )
 
 
 def ivfpq_fit(
@@ -530,9 +433,7 @@ def ivfpq_fit(
 
     from pyspark import inheritable_thread_target
 
-    from graph_database_spark.operators.ivf import _unit_centroid_micro
-
-    # ---- IVF coarse cells (the ivf_topk_md5 integer cell machinery) ----
+    # ---- IVF coarse cells (operators/ivf's one cell kernel) ------------
     cents = _unit_centroid_micro(vectors, id_col, vec_col, n_centroids)
     # The two eager materializations below (simmed's mapInArrow
     # checkpoint, pex's explode checkpoint) are INDEPENDENT single-job
@@ -554,16 +455,15 @@ def ivfpq_fit(
         )
         simmed = f_sim.result()
         pex = f_pex.result()
-    # candidate cell: argmax sim, first-index tiebreak (s DESC, c ASC).
+    # candidate cell: ivf._best_cell's argmax (s DESC, c ASC).
     # 1-BASED (r14): cells now join against the cell-mean table (and
     # the oracle's row_number cells); the r13 0-based labels were only
     # ever compared with each other, which hid the off-by-one until
     # residual encoding brought the centroid values back into the plan.
     # Lazy (r14): narrow argmax projection over the checkpointed simmed
     # frame — every consumer re-derives it in-plan for pennies.
-    best = F.expr("array_position(sims, array_max(sims))").cast("int")
     cand_cell = simmed.select(
-        F.col("vid").alias("cand_id"), best.alias("cell")
+        F.col("vid").alias("cand_id"), _best_cell().alias("cell")
     )
 
     # ---- residual PQ training ------------------------------------------

@@ -11,10 +11,10 @@ same way IVF search does: the only wide shuffle is one hash-partition on
 the cell key, and pairwise work is bounded by cell occupancy
 (~N / n_centroids, the same knob discipline as operators/ivf.py).
 
-Verification follows the repo's md5-twin philosophy (see
-ivf.ivf_topk_md5): the centroid draw is md5-ordered, every vector is
-unit-normalized then quantized to BIGINT micro-units, and both the
-cell-assignment argmax and the pairwise cosine are INTEGER dot products
+Verification follows operators/ivf.py: the centroid draw is
+md5-ordered, every vector is unit-normalized then quantized to BIGINT
+micro-units, and both the cell-assignment argmax (ivf._best_cell) and
+the pairwise cosine are INTEGER dot products
 — order-exact cross-engine, so the full pipeline value-hashes against a
 pure-SQL DuckDB oracle. No float ever crosses a group-sum.
 
@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_database_spark.functions.vectors import l2_norm
-from graph_database_spark.operators.ivf import _unit_centroid_micro
+from graph_database_spark.operators.ivf import _best_cell, _unit_centroid_micro
 from graph_database_spark.operators.spread import spread
 
 __all__ = ["semdedup_md5"]
@@ -102,13 +102,7 @@ def semdedup_md5(
     # row_number ORDER BY s DESC, c ASC).
     assigned = (
         base.withColumn("sims", sims)
-        .select(
-            "id",
-            "um",
-            F.array_position(F.col("sims"), F.array_max(F.col("sims")))
-            .cast("int")
-            .alias("cell"),
-        )
+        .select("id", "um", _best_cell().alias("cell"))
         # Referenced three ways below (both self-join sides + the final
         # left join) — checkpoint or the quantization re-derives per arm.
         .localCheckpoint()

@@ -12,12 +12,17 @@ many query batches. This sink persists the IVF index as:
 - a **centroid manifest** (JSON, a few KB): the trained model
   parameters, loaded at probe time without touching the corpus.
 
-Probe = row-local query->cell ranking against the manifest's centroid
-literals, explode to ``n_probe`` cells, one equi-join against the
-pre-bucketed assignments (query side alone shuffles — the small side),
-exact in-cell cosine re-rank, per-query top-k. Result parity with the
-refit path (operators/ivf.ivf_topk) is pytest-pinned: the build reuses
-ivf's own centroid draw and assignment expressions.
+The centroids are operators/ivf's md5-ordered draw, quantized to integer
+micro-units; the manifest records them with ``centroid_family:
+"md5-micro"``, and probe and append refuse an index of any other family.
+Build, append and probe assign and rank cells with the one IVF kernel
+ivf_topk uses: build and append store ivf._assign_cells rows; probe =
+ivf._query_cells (query->cell ranking against the manifest's centroids,
+one row per probed cell), one equi-join against the pre-bucketed
+assignments (query side alone shuffles — the small side), exact in-cell
+cosine re-rank and per-query top-k (ivf._rerank_topk). So probing an
+index built over a corpus returns the refit ivf_topk rows exactly
+(pytest-pinned).
 
 Citation: the reference has no index persistence at all — it reloads
 text edge files per run (src/main.js:244-262); this is the Spark-native
@@ -31,8 +36,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from graph_database_spark.functions.vectors import l2_norm
-from graph_database_spark.operators.ivf import _cell_sims, _unit_centroids
+from graph_database_spark.operators.ivf import (
+    _assign_cells,
+    _best_cell,
+    _micro_sims,
+    _probe_cells,
+    _query_cells,
+    _rerank_topk,
+    _unit_centroid_micro,
+)
 from graph_database_spark.sources.bucketed import write_bucketed
 
 __all__ = [
@@ -53,6 +65,39 @@ _MANIFEST = "_ann_index.json"
 # The hyperplane family of operators/similarity._md5_sign_matrix; the
 # LSH manifest records it and probe_lsh_index refuses any other.
 _LSH_SIGN_FAMILY = "md5-parity"
+# The centroid family of operators/ivf._unit_centroid_micro (md5-ordered
+# draw, integer micro-unit centroids); probe and append refuse others.
+_IVF_CENTROID_FAMILY = "md5-micro"
+
+
+def _load_manifest(path: str) -> dict:
+    with open(os.path.join(path, _MANIFEST)) as f:
+        return json.load(f)
+
+
+def _write_manifest(path: str, manifest: dict) -> None:
+    tmp = os.path.join(path, _MANIFEST + ".tmp")
+    os.makedirs(path, exist_ok=True)
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(path, _MANIFEST))
+
+
+def _load_ivf_manifest(path: str) -> dict:
+    """The manifest of an IVF index, refusing any other kind and any
+    centroid family but md5-micro: an index with float centroids (an
+    older build) ranks cells differently, so probing or growing it with
+    these sims would silently misplace vectors and miss candidates."""
+    m = _load_manifest(path)
+    if m.get("kind") != "ivf":
+        raise ValueError(f"index at {path} is kind={m.get('kind')!r}, not ivf")
+    if m.get("centroid_family") != _IVF_CENTROID_FAMILY:
+        raise ValueError(
+            f"index at {path} has centroid_family="
+            f"{m.get('centroid_family')!r}, not {_IVF_CENTROID_FAMILY!r}; "
+            "rebuild it with build_ivf_index"
+        )
+    return m
 
 
 def build_ivf_index(
@@ -65,45 +110,29 @@ def build_ivf_index(
     n_buckets: int = 16,
     cents: list | None = None,
 ) -> dict:
-    """Fit centroids (the deterministic hash-ordered draw ivf_topk
-    uses) — or accept pre-trained ``cents`` — assign every candidate to
-    its nearest cell, and persist the assignment as a cell-bucketed
-    parquet table + a centroid manifest. Returns the manifest dict."""
+    """Fit centroids (the md5-ordered micro draw ivf_topk uses) — or
+    accept pre-drawn integer micro ``cents`` — assign every candidate to
+    its nearest cell with ivf_topk's kernel and argmax, and persist the
+    assignment as a cell-bucketed parquet table + a centroid manifest
+    (``centroid_family: "md5-micro"``). Probing it returns the refit
+    ivf_topk rows exactly (pytest-pinned). Returns the manifest dict."""
     if cents is None:
-        cents = _unit_centroids(candidates, id_col, vec_col, n_centroids)
-    assigned = candidates.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-        _cell_sims(F.col(vec_col), cents).alias("sims"),
-    ).select(
-        F.array_position(F.col("sims"), F.array_max(F.col("sims")))
-        .cast("int")
-        .alias("cell"),
-        "vec_id",
-        "embedding",
-        "nrm",
+        cents = _unit_centroid_micro(candidates, id_col, vec_col, n_centroids)
+    write_bucketed(
+        _assign_cells(candidates, cents, id_col, vec_col),
+        table, path, "cell", n_buckets,
     )
-    write_bucketed(assigned, table, path, "cell", n_buckets)
     manifest = {
         "kind": "ivf",
         "table": table,
         "n_centroids": len(cents),
         "dim": len(cents[0]) if cents else 0,
         "n_buckets": n_buckets,
+        "centroid_family": _IVF_CENTROID_FAMILY,
         "centroids": cents,
     }
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    os.makedirs(path, exist_ok=True)
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    _write_manifest(path, manifest)
     return manifest
-
-
-def _load_manifest(path: str) -> dict:
-    with open(os.path.join(path, _MANIFEST)) as f:
-        return json.load(f)
 
 
 def append_ivf_index(
@@ -122,36 +151,13 @@ def append_ivf_index(
     distribution moves (rebuild cadence is the operator's knob).
     Probe parity with a from-scratch build under the SAME centroids is
     pytest-pinned (tests/test_ann_index.py)."""
-    m = _load_manifest(path)
-    if m.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is kind={m.get('kind')!r}, not ivf")
-    cents = m["centroids"]
-    assigned = new_vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-        _cell_sims(F.col(vec_col), cents).alias("sims"),
-    ).select(
-        F.array_position(F.col("sims"), F.array_max(F.col("sims")))
-        .cast("int")
-        .alias("cell"),
-        "vec_id",
-        "embedding",
-        "nrm",
-    )
+    m = _load_ivf_manifest(path)
     # One bucketed write path for build and append (the ADVICE r13
     # desync rule, applied here as well as to the minhash index).
     write_bucketed(
-        assigned, m["table"], path, "cell", m["n_buckets"], mode="append"
+        _assign_cells(new_vectors, m["centroids"], id_col, vec_col),
+        m["table"], path, "cell", m["n_buckets"], mode="append",
     )
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    os.makedirs(path, exist_ok=True)
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
 
 
 def build_lsh_index(
@@ -282,66 +288,14 @@ def probe_ivf_index(
     """``(query_id, cand_id, sim, rank)`` against a persisted index —
     no refit, no corpus scan outside the probed cells. The centroid
     model comes from the manifest (driver-side KBs); the candidate side
-    arrives pre-bucketed on ``cell``."""
-    m = _load_manifest(path)
-    cents = m["centroids"]
-    n_cells = len(cents)
-    cand = spark.table(m["table"]).select(
-        "cell",
-        F.col("vec_id").alias("idb"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    qry = queries.select(
-        F.col(id_col).alias("ida"),
-        F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
-        _cell_sims(F.col(vec_col), cents).alias("sims"),
-    )
-    ranked_cells = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n_cells)),
-                    lambda i: F.struct(
-                        F.element_at(F.col("sims"), i).alias("s"), i.alias("c")
-                    ),
-                )
-            )
-        ),
-        1,
-        min(n_probe, n_cells),
-    )
-    qcells = qry.select(
-        "ida", "va", "na",
-        F.explode(F.transform(ranked_cells, lambda sc: sc["c"].cast("int"))).alias("cell"),
-    )
-    pairs = (
-        qcells.join(cand, "cell")
-        .where(F.col("ida") != F.col("idb"))
-        .select(
-            F.col("ida").alias("query_id"),
-            F.col("idb").alias("cand_id"),
-            F.round(
-                F.aggregate(
-                    F.zip_with("va", "vb", lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("sim"),
-        )
-        # No pair dedup needed: IVF assigns each candidate to exactly
-        # ONE cell and the probed cells are distinct, so a (query,
-        # cand) pair can arise at most once — dropping the dedup saves
-        # a full (query_id, cand_id) shuffle on the widest frame.
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "sim", "rank")
+    arrives pre-bucketed on ``cell``. Queries rank cells and re-rank
+    pairs exactly as ivf_topk does. Raises ValueError on a manifest of
+    another kind or centroid family (see ``_load_ivf_manifest``)."""
+    m = _load_ivf_manifest(path)
+    return _rerank_topk(
+        _query_cells(queries, m["centroids"], n_probe, id_col, vec_col),
+        spark.table(m["table"]),
+        k,
     )
 
 
@@ -530,11 +484,7 @@ def append_ivfpq_index(
     as append_ivf_index: the model drifts stale as the distribution
     moves (rebuild cadence is the operator's knob), and appended ids
     must be disjoint from those indexed (the minhash append rule)."""
-    from graph_database_spark.operators.pq import (
-        _explode_micro,
-        _micro_sims,
-        pq_encode,
-    )
+    from graph_database_spark.operators.pq import _explode_micro, pq_encode
 
     m = _load_manifest(path)
     if m.get("kind") != "ivfpq":
@@ -544,9 +494,8 @@ def append_ivfpq_index(
     spark = new_vectors.sparkSession
     cmn, codebook = _ivfpq_model_frames(spark, m)
     simmed = _micro_sims(new_vectors, m["cents"], id_col, vec_col)
-    best = F.expr("array_position(sims, array_max(sims))").cast("int")
     cell_of = simmed.select(
-        F.col("vid").alias("vec_id"), best.alias("cell")
+        F.col("vid").alias("vec_id"), _best_cell().alias("cell")
     ).localCheckpoint()
     nex = _explode_micro(
         new_vectors, m["sub_dims"], id_col, vec_col
@@ -589,8 +538,6 @@ def probe_ivfpq_index(
         _adc_qtab,
         _adc_rank,
         _explode_micro,
-        _micro_sims,
-        _probe_cells,
     )
 
     m = _load_manifest(path)

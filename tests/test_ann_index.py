@@ -36,14 +36,14 @@ def test_probe_matches_refit_and_is_reusable(spark, tmp_path):
 
 
 def test_append_grows_index_without_rebuild(spark, tmp_path):
-    from graph_database_spark.operators.ivf import _unit_centroids
+    from graph_database_spark.operators.ivf import _unit_centroid_micro
     from graph_database_spark.sinks.ann import append_ivf_index
 
     emb = load_table(spark, SF_DIR, "embeddings")
     half_a = emb.where((emb.vec_id % 2) == 0)
     half_b = emb.where((emb.vec_id % 2) == 1)
     queries = emb.where((emb.vec_id % 20) == 0)
-    cents = _unit_centroids(half_a, "vec_id", "embedding", 8)
+    cents = _unit_centroid_micro(half_a, "vec_id", "embedding", 8)
     try:
         # lifecycle: build on A, append B (assigned against A's frozen
         # centroids, no rebuild)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,28 +48,45 @@ def test_ivf_more_probes_more_recall(spark, emb):
 
 
 def test_ivf_md5_twin_recall_and_determinism(spark, emb):
-    """The md5 twin is real IVF machinery: probing all cells is exact
-    (recall 1.0, like ivf_topk), and repeated runs are bit-identical
-    (integer cell sims + rounded re-rank)."""
-    from graph_database_spark.operators.ivf import ivf_topk_md5
-
+    """The md5 cell family is real IVF machinery: probing all cells is
+    exact (recall 1.0), and repeated runs are bit-identical (integer
+    cell sims + rounded re-rank)."""
     queries = emb.where(F.col("vec_id") % 100 == 0)
     truth = {(r["query_id"], r["cand_id"])
              for r in S.brute_force_topk(queries, emb, k=10).collect()}
     exhaustive = {(r["query_id"], r["cand_id"])
-                  for r in ivf_topk_md5(queries, emb, k=10, n_centroids=16,
-                                        n_probe=16).collect()}
+                  for r in ivf_topk(queries, emb, k=10, n_centroids=16,
+                                    n_probe=16).collect()}
     assert len(truth & exhaustive) / len(truth) == 1.0
-    a = sorted(map(tuple, ivf_topk_md5(queries, emb, k=5).collect()))
-    b = sorted(map(tuple, ivf_topk_md5(queries, emb, k=5).collect()))
-    assert a == b
-
-
-def test_ivf_deterministic(spark, emb):
-    queries = emb.where(F.col("vec_id") % 100 == 0)
     a = sorted(map(tuple, ivf_topk(queries, emb, k=5).collect()))
     b = sorted(map(tuple, ivf_topk(queries, emb, k=5).collect()))
     assert a == b
+
+
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01_DIR), reason="sf0.1 testdata absent")
+def test_ivf_rerank_multiplies_in_double(spark, tmp_path):
+    """Pair (950, 145) of the sf0.1 embeddings has cosine 0.3611924973
+    when the FLOAT elements are multiplied in double (the DuckDB
+    oracle), but 0.3611925031 when they are multiplied in float32 first,
+    which rounds the other way at 6 digits. Both the refit path and a
+    persisted-index probe must re-rank in double."""
+    from graph_database_spark.sinks.ann import build_ivf_index, probe_ivf_index
+
+    emb = load_table(spark, SF01_DIR, "embeddings")
+    query = emb.where(F.col("vec_id") == 950)
+    cands = emb.where(F.col("vec_id").isin(950, 145))
+    want = [(950, 145, 0.361192, 1)]
+    refit = ivf_topk(query, cands, k=1, n_centroids=1, n_probe=1)
+    assert [tuple(r) for r in refit.collect()] == want
+    try:
+        build_ivf_index(cands, "ivf_double_idx", str(tmp_path / "d"), n_centroids=1)
+        probed = probe_ivf_index(spark, str(tmp_path / "d"), query, k=1, n_probe=1)
+        assert [tuple(r) for r in probed.collect()] == want
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ivf_double_idx")
 
 
 def test_scalar_quantize_codes(spark):

@@ -66,16 +66,40 @@ def test_probe_join_has_no_index_side_shuffle(spark, tmp_path):
 
 
 def test_wrong_kind_raises(spark, tmp_path):
-    from graph_database_spark.sinks.ann import build_ivf_index
+    """Every probe refuses a manifest of another kind; probe_ivf_index
+    and append_ivf_index also refuse an IVF manifest without the
+    md5-micro centroid family (one written with float centroids by an
+    older build), whose cells these sims would rank differently."""
+    import json
+    import os
+
     import pytest
 
+    from graph_database_spark.sinks.ann import (
+        append_ivf_index,
+        build_ivf_index,
+        probe_ivf_index,
+    )
+
     emb = load_table(spark, SF_DIR, "embeddings")
+    ivf_path, lsh_path = str(tmp_path / "idx3"), str(tmp_path / "idx5")
     try:
-        build_ivf_index(emb, "ann_kind_idx", str(tmp_path / "idx3"), n_centroids=4)
+        m = build_ivf_index(emb, "ann_kind_idx", ivf_path, n_centroids=4)
         with pytest.raises(ValueError, match="not lsh"):
-            probe_lsh_index(spark, str(tmp_path / "idx3"), emb, k=5)
+            probe_lsh_index(spark, ivf_path, emb, k=5)
+        build_lsh_index(emb, "ann_kind_lsh_idx", lsh_path, n_bits=4, n_tables=8)
+        with pytest.raises(ValueError, match="not ivf"):
+            probe_ivf_index(spark, lsh_path, emb, k=5)
+        assert m.pop("centroid_family") == "md5-micro"
+        with open(os.path.join(ivf_path, "_ann_index.json"), "w") as f:
+            json.dump(m, f)
+        with pytest.raises(ValueError, match="centroid_family"):
+            probe_ivf_index(spark, ivf_path, emb, k=5)
+        with pytest.raises(ValueError, match="centroid_family"):
+            append_ivf_index(emb, ivf_path)
     finally:
         spark.sql("DROP TABLE IF EXISTS ann_kind_idx")
+        spark.sql("DROP TABLE IF EXISTS ann_kind_lsh_idx")
 
 
 def test_other_sign_family_raises(spark, tmp_path):
