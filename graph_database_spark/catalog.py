@@ -213,9 +213,9 @@ def q_circles_membership(spark, sf_dir):
 
 
 def q_pagerank_personalized(spark, sf_dir):
-    # Rows-only: personalized PageRank seeded at the 4 smallest vertex
-    # ids (deterministic seed set) — the recsys similarity-walk form;
-    # numpy parity pinned in tests/test_graph_analytics.py.
+    # Hash-verified personalized PageRank seeded at the 4 smallest vertex
+    # ids (deterministic seed set) — the recsys similarity-walk form —
+    # with the default early stop, against the stop-rule unrolled oracle.
     from graph_database_spark.operators.pagerank import pagerank
 
     # edges feeds the seed derivation (twice) AND the pagerank build —
@@ -228,31 +228,27 @@ def q_pagerank_personalized(spark, sf_dir):
         .orderBy("id")
         .limit(4)
     )
-    return pagerank(edges, sources=seeds).select(
-        "id", F.round("rank", 6).alias("rank")
-    )
+    return pagerank(edges, sources=seeds)
 
 
 def q_pagerank(spark, sf_dir):
-    # Rows-only (iterative — no SQL oracle): PageRank over the
-    # co-purchase graph on the shared aggregate-messages skeleton;
-    # rank-mass conservation + numpy power-iteration parity pinned by
-    # tests/test_graph_analytics.py.
+    # Hash-verified PageRank over the co-purchase graph: integer
+    # nano-unit ranks, stopping at the first round with max |Δ| below
+    # 1e-6 (an exact integer probe), against an unrolled DuckDB oracle
+    # that applies the same stop rule (_build_pagerank_q_sql).
     from graph_database_spark.operators.pagerank import pagerank
 
-    return pagerank(copurchase_edges(spark, sf_dir)).select(
-        "id", F.round("rank", 6).alias("rank")
-    )
+    return pagerank(copurchase_edges(spark, sf_dir))
 
 
 def q_pagerank_quantized(spark, sf_dir):
-    # Hash-verified iterative numerics: ten PageRank rounds with the rank
-    # vector quantized to BIGINT nano-units each round (integer message
-    # sums are partition-order-independent), against a ten-CTE unrolled
-    # DuckDB oracle. The floating `pagerank` stays the production path.
-    from graph_database_spark.operators.pagerank import pagerank_quantized
+    # Hash-verified iterative numerics: a fixed budget of ten PageRank
+    # rounds (tol=0 disables the early stop) in integer nano-units
+    # (integer message sums are partition-order-independent), against a
+    # ten-CTE unrolled DuckDB oracle.
+    from graph_database_spark.operators.pagerank import pagerank
 
-    return pagerank_quantized(copurchase_edges(spark, sf_dir))
+    return pagerank(copurchase_edges(spark, sf_dir), max_iterations=10, tol=0.0)
 
 
 def q_events_ewma(spark, sf_dir):
@@ -324,11 +320,20 @@ def q_ngram_jaccard(spark, sf_dir):
 
 
 def q_text_embedding_neardup(spark, sf_dir):
-    # Rows-only: raw text -> hash-trick embeddings -> exact grid cosine
-    # pairs — the full featurize-then-match composition (embedding values
-    # pinned by tests/test_dedup.py::test_hash_embedding_properties).
-    emb = T.hash_embedding(load_table(spark, sf_dir, "documents"), dim=64)
-    return S.cosine_pairs_above(emb, threshold=0.8, id_col="doc_id", vec_col="embedding")
+    # Raw text -> md5 hashing-trick features kept as RAW integer count
+    # vectors -> exact grid cosine pairs: the full featurize-then-match
+    # composition, hash-verified (cosine is scale-invariant, so skipping
+    # normalization keeps the similarity semantics while dot products
+    # are exact integer sums and norms IEEE sqrt of exact integers).
+    # Zero vectors (all buckets cancelled) are excluded on BOTH sides —
+    # their cosine is 0/0 = NaN, which compares as 'large' in both
+    # engines.
+    emb = T.hash_embedding(
+        load_table(spark, sf_dir, "documents"), dim=64
+    ).where(F.exists("embedding", lambda x: x != 0.0))
+    return S.cosine_pairs_above(
+        emb, threshold=0.8, id_col="doc_id", vec_col="embedding"
+    )
 
 
 def q_doc_chunks(spark, sf_dir):
@@ -350,19 +355,9 @@ def q_winnow_fingerprints(spark, sf_dir):
 
 
 def q_text_embedding_neardup_md5(spark, sf_dir):
-    # Hash-verified twin of text_embedding_neardup: md5 bucket/sign
-    # hashing-trick features kept as RAW integer count vectors (cosine
-    # is scale-invariant, so skipping normalization preserves the
-    # similarity semantics while making dot products exact integer sums
-    # and norms IEEE sqrt of exact integers). Zero vectors (all buckets
-    # cancelled) are excluded on BOTH sides — their cosine is 0/0 = NaN,
-    # which compares as 'large' in both engines.
-    emb = T.hash_embedding_md5(
-        load_table(spark, sf_dir, "documents"), dim=64
-    ).where(F.exists("embedding", lambda x: x != 0.0))
-    return S.cosine_pairs_above(
-        emb, threshold=0.8, id_col="doc_id", vec_col="embedding"
-    )
+    # text_embedding_neardup under its own name, kept because queries()
+    # lists it; the md5 hashing trick is the only text featurizer.
+    return q_text_embedding_neardup(spark, sf_dir)
 
 
 def q_staged_dedup(spark, sf_dir):
@@ -4431,9 +4426,9 @@ def q_collocations_llr(spark, sf_dir):
 def q_textrank_keywords(spark, sf_dir):
     # TextRank (r9): quantized PageRank over the adjacent-token
     # co-occurrence graph — keyword salience as graph centrality
-    # (Mihalcea & Tarau 2004), composing the hash-verified
-    # pagerank_quantized machinery over a text-derived edge set.
-    from graph_database_spark.operators.pagerank import pagerank_quantized
+    # (Mihalcea & Tarau 2004), composing the hash-verified nano-unit
+    # pagerank (ten fixed rounds) over a text-derived edge set.
+    from graph_database_spark.operators.pagerank import pagerank
 
     toks = (
         load_table(spark, sf_dir, "documents")
@@ -4457,7 +4452,7 @@ def q_textrank_keywords(spark, sf_dir):
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
     )
-    return pagerank_quantized(edges, weight_col="w")
+    return pagerank(edges, max_iterations=10, tol=0.0, weight_col="w")
 
 
 def q_token_counts_cms(spark, sf_dir):
@@ -5246,9 +5241,8 @@ def q_copurchase_strength(spark, sf_dir):
 
 def q_pagerank_personalized_quantized(spark, sf_dir):
     # Hash-verified personalized ranks: teleport mass on the 32 smallest
-    # vertex ids - completing the quantized-twin trio (classic/weighted/
-    # personalized all cross-engine exact).
-    from graph_database_spark.operators.pagerank import pagerank_quantized
+    # vertex ids, ten fixed rounds (tol=0).
+    from graph_database_spark.operators.pagerank import pagerank
 
     # edges feeds the vertex derivation AND the pagerank build — one
     # shared checkpoint instead of two co-purchase derivations.
@@ -5259,31 +5253,32 @@ def q_pagerank_personalized_quantized(spark, sf_dir):
         .orderBy("id")
         .limit(32)
     )
-    return pagerank_quantized(edges, sources=seeds)
+    return pagerank(edges, max_iterations=10, tol=0.0, sources=seeds)
 
 
 def q_pagerank_weighted_quantized(spark, sf_dir):
     # Hash-verified weighted iterative numerics: tie-strength weights are
-    # integer co-purchase counts, so the quantized scheme's message sums
-    # (ratio * weight) stay exact — same ten-CTE unrolled oracle family
-    # as pagerank_quantized.
-    from graph_database_spark.operators.pagerank import pagerank_quantized
-    from graph_database_spark.plans.copurchase import copurchase_edges_weighted
-
-    return pagerank_quantized(
-        copurchase_edges_weighted(spark, sf_dir), weight_col="weight"
-    )
-
-
-def q_pagerank_weighted(spark, sf_dir):
-    # Rows-only: PageRank with co-purchase tie strengths as edge
-    # weights (numpy parity for the weighted form pytest-pinned).
+    # integer co-purchase counts, so the nano-unit message sums
+    # (ratio * weight) stay exact — ten fixed rounds (tol=0), same
+    # unrolled oracle family as pagerank_quantized.
     from graph_database_spark.operators.pagerank import pagerank
     from graph_database_spark.plans.copurchase import copurchase_edges_weighted
 
     return pagerank(
-        copurchase_edges_weighted(spark, sf_dir), weight_col="weight"
-    ).select("id", F.round("rank", 6).alias("rank"))
+        copurchase_edges_weighted(spark, sf_dir),
+        max_iterations=10,
+        tol=0.0,
+        weight_col="weight",
+    )
+
+
+def q_pagerank_weighted(spark, sf_dir):
+    # Hash-verified: PageRank with co-purchase tie strengths (integer
+    # counts) as edge weights, with the default early stop.
+    from graph_database_spark.operators.pagerank import pagerank
+    from graph_database_spark.plans.copurchase import copurchase_edges_weighted
+
+    return pagerank(copurchase_edges_weighted(spark, sf_dir), weight_col="weight")
 
 
 def q_ktruss(spark, sf_dir):
@@ -7486,7 +7481,7 @@ def q_kmeans_cells(spark, sf_dir):
     # updates over integer micro-unit vectors — BIGINT squared
     # distances, floor-based centroid means (one IEEE division + floor,
     # bit-identical cross-engine), md5-ordered seeds. The clustering
-    # step SemDeDup-style pipelines presuppose; pagerank_quantized's
+    # step SemDeDup-style pipelines presuppose; the nano-unit pagerank's
     # verified-iteration philosophy applied to geometry.
     from graph_database_spark.operators.kmeans import kmeans_assign
 
@@ -9190,16 +9185,24 @@ def _build_ktruss_sql(k: int = 4, rounds: int = 16) -> str:
 def _build_pagerank_q_sql(
     iters: int = 10,
     weighted: bool = False,
-    personalized: bool = False,
+    seeds: int | None = None,
     graph_sql: str | None = None,
+    tol: float = 0.0,
 ) -> str:
-    # Unrolled fixed-iteration PageRank: one (messages, ranks) CTE pair
-    # per round, mirroring pagerank_quantized's expression trees
-    # operand-for-operand (see that docstring for why this hash-matches).
+    # Unrolled PageRank: one (messages, ranks) CTE pair per round,
+    # mirroring operators/pagerank's expression trees operand-for-operand
+    # (see that docstring for why this hash-matches).
     # ``weighted``: co-purchase tie-strength weights — integer counts, so
     # strength sums and ratio*weight messages stay exact.
+    # ``seeds``: personalized teleport on the ``seeds`` smallest vertex
+    # ids (None = uniform teleport).
     # ``graph_sql``: a caller-supplied CTE chain defining symw(v, n, w)
     # replaces the co-purchase prelude entirely (textrank's word graph).
+    # ``tol`` > 0: the operator's early stop — d_k = max|r_k - r_{k-1}|
+    # per round, answer = the first round with d_k < tol * 1e9 (the same
+    # Python float the operator compares against), else the last round.
+    # Every r_k is then read up to four times, so each is MATERIALIZED;
+    # an inlined chain re-derives every earlier round per reference.
     if graph_sql is not None:
         sym_cte = ""
     elif weighted:
@@ -9217,11 +9220,11 @@ def _build_pagerank_q_sql(
     else:
         sym_cte = """
     symw AS (SELECT v, n, CAST(1 AS BIGINT) AS w FROM sym),"""
-    if personalized:
-        # Teleport preference: 1e9/|S| on the 32 smallest vertex ids, 0
-        # elsewhere - mirrors pagerank_quantized(sources=...).
-        pref_cte = """
-    srcs AS (SELECT DISTINCT v AS id FROM symw ORDER BY id LIMIT 32),
+    if seeds is not None:
+        # Teleport preference: 1e9/|S| on the smallest vertex ids, 0
+        # elsewhere - mirrors pagerank(sources=...).
+        pref_cte = f"""
+    srcs AS (SELECT DISTINCT v AS id FROM symw ORDER BY id LIMIT {int(seeds)}),
     ns AS (SELECT count(*) AS c FROM srcs),
     prefs AS MATERIALIZED (
         SELECT d.id,
@@ -9245,6 +9248,7 @@ def _build_pagerank_q_sql(
     nn AS (SELECT count(*) AS n FROM deg),"""
         + pref_cte
     ]
+    mat = " MATERIALIZED" if tol > 0 else ""
     for k in range(1, iters + 1):
         parts.append(f""",
     m{k} AS (
@@ -9252,7 +9256,7 @@ def _build_pagerank_q_sql(
                                 / CAST(d.deg AS DOUBLE), 0) AS BIGINT) AS m
         FROM r{k - 1} p JOIN deg d USING (id)
     ),
-    r{k} AS (
+    r{k} AS{mat} (
         SELECT s.n AS id,
                CAST(round(
                    (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * pf.pref
@@ -9262,9 +9266,28 @@ def _build_pagerank_q_sql(
         GROUP BY s.n, pf.pref
     )""")
     prelude = GRAPH_CTES if graph_sql is None else graph_sql
+    if tol <= 0:
+        return (
+            f"WITH {prelude},{''.join(parts)}\n"
+            f"    SELECT id, r AS rank_nano FROM r{iters}"
+        )
+    deltas = "\n        UNION ALL\n".join(
+        f"        SELECT {k} AS k, max(abs(a.r - b.r)) AS d"
+        f" FROM r{k} a JOIN r{k - 1} b USING (id)"
+        for k in range(1, iters + 1)
+    )
+    rounds = "\n        UNION ALL\n".join(
+        f"        SELECT {k} AS k, id, r FROM r{k}" for k in range(1, iters + 1)
+    )
     return (
-        f"WITH {prelude},{''.join(parts)}\n"
-        f"    SELECT id, r AS rank_nano FROM r{iters}"
+        f"WITH {prelude},{''.join(parts)},\n"
+        f"    deltas AS (\n{deltas}\n    ),\n"
+        "    stop AS (\n"
+        "        SELECT coalesce(min(k) FILTER (WHERE d < "
+        f"CAST({tol * 1e9!r} AS DOUBLE)), {iters}) AS k FROM deltas\n"
+        "    )\n"
+        f"    SELECT rs.id, rs.r AS rank_nano\n"
+        f"    FROM (\n{rounds}\n    ) rs JOIN stop USING (k)"
     )
 
 
@@ -10083,6 +10106,7 @@ ORACLES["text_embedding_neardup_md5"] = f"""
     WHERE round(CAST(dp AS DOUBLE) / (na.nrm * nb.nrm), 6)
           >= CAST(0.8 AS DOUBLE)
 """
+ORACLES["text_embedding_neardup"] = ORACLES["text_embedding_neardup_md5"]
 def _build_hits_sql(iters: int = 6) -> str:
     # Unrolled HITS: one (auth-raw, auth, hub-raw, hub) CTE quartet per
     # round, mirroring hits_quantized's expression trees operand-for-
@@ -10200,8 +10224,13 @@ ORACLES["edge_betweenness"] = _build_edge_betweenness_sql()
 ORACLES["ktruss"] = _build_ktruss_sql()
 ORACLES["pagerank_quantized"] = _build_pagerank_q_sql()
 ORACLES["pagerank_weighted_quantized"] = _build_pagerank_q_sql(weighted=True)
-ORACLES["pagerank_personalized_quantized"] = _build_pagerank_q_sql(
-    personalized=True
+ORACLES["pagerank_personalized_quantized"] = _build_pagerank_q_sql(seeds=32)
+ORACLES["pagerank"] = _build_pagerank_q_sql(iters=20, tol=1e-6)
+ORACLES["pagerank_weighted"] = _build_pagerank_q_sql(
+    iters=20, weighted=True, tol=1e-6
+)
+ORACLES["pagerank_personalized"] = _build_pagerank_q_sql(
+    iters=20, seeds=4, tol=1e-6
 )
 ORACLES["excess_suppliers"] = """
     WITH flt AS (
@@ -13515,7 +13544,7 @@ ORACLES["hybrid_search"] = f"""
         FROM agg QUALIFY r_lex <= 50
     ),
     -- dense leg: md5 hash-trick embeddings (mirrors
-    -- text.hash_embedding_md5 / the text_embedding_neardup_md5 oracle)
+    -- text.hash_embedding / the text_embedding_neardup oracle)
     h AS (
         SELECT doc_id,
                CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) % 64 AS b,

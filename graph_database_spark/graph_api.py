@@ -103,6 +103,8 @@ class SparkGraph:
         weight_col: str | None = None,
         sources: DataFrame | None = None,
     ) -> DataFrame:
+        """``(id, rank_nano)`` — operators.pagerank, ranks in integer
+        nano-units (1e-9) with its default early stop."""
         return pagerank(
             self.edges,
             damping=damping,

@@ -7,7 +7,7 @@ are buyers whose baskets concentrate on authoritative parts, authorities
 are parts bought by strong hubs (Kleinberg's mutual-reinforcement pair,
 the classic users-x-items form).
 
-Quantization contract (the pagerank_quantized philosophy): every score
+Quantization contract (the operators/pagerank one): every score
 vector is snapped to integer nano-units after each normalization, so
 the per-node message sums are BIGINT sums — partition-order-exact — and
 the only float arithmetic per round is ONE expression

@@ -86,8 +86,8 @@ def _micro_sims(
     Exactness: integer-valued float64 dot products are exact below 2^53
     partial sums (|xm|,|cm| <= ~2.1e6 micro units and d <= 1024 keeps
     max |partial| < 2^52); an int64 fallback guards the bound anyway.
-    The output is checkpointed: cell assignment and probe ranking both
-    derive from it."""
+    The output is lazy: a caller that reads it more than once
+    checkpoints it (pq.ivfpq_fit's ``simmed``)."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.int64)  # (n_centroids, d)
@@ -145,7 +145,7 @@ def _micro_sims(
     out = StructType(
         [fields[0], StructField("sims", ArrayType(LongType())), *fields[2:]]
     )
-    return packed.mapInArrow(fn, out).localCheckpoint()
+    return packed.mapInArrow(fn, out)
 
 
 def _best_cell() -> Column:
@@ -159,9 +159,6 @@ def _probe_cells(simmed: DataFrame, n_probe: int) -> DataFrame:
     cell DESC), 1-based, mirroring the oracle's
     reverse(array_sort(struct(s, c))) order; columns of ``simmed`` other
     than ``vid``/``sims`` (the kernel's ``keep``) pass through."""
-    # Lazy on purpose (r14): a narrow per-row transform over the
-    # CHECKPOINTED simmed frame — consumers re-derive it for pennies,
-    # so its own checkpoint job was pure fixed overhead.
     kept = [c for c in simmed.columns if c not in ("vid", "sims")]
     return simmed.select(
         F.col("vid").alias("query_id"),

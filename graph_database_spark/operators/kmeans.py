@@ -4,7 +4,7 @@ The clustering step the SemDeDup / IVF family presupposes: IVF here
 (operators/ivf.py) buckets against FIXED sampled centroids; this runs
 the actual Lloyd loop — assign to nearest centroid, recompute centroids
 as member means, repeat — with every round cross-engine exact, the
-pagerank_quantized philosophy applied to clustering:
+nano-unit PageRank's integer-state rule applied to clustering:
 
 - vectors snap to integer micro-units once (``round(x*1e6) AS
   BIGINT``), so squared Euclidean distances are BIGINT sums

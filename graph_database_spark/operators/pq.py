@@ -436,14 +436,17 @@ def ivfpq_fit(
     # ---- IVF coarse cells (operators/ivf's one cell kernel) ------------
     cents = _unit_centroid_micro(vectors, id_col, vec_col, n_centroids)
     # The two eager materializations below (simmed's mapInArrow
-    # checkpoint, pex's explode checkpoint) are INDEPENDENT single-job
-    # chains over the same input — overlapped from a 2-thread pool so
-    # one job's tail back-fills the other's idle executors (guide §2.6,
-    # the percolation pattern; r15).
+    # checkpoint — simmed feeds cand_cell and the inline queries — and
+    # pex's explode checkpoint) are INDEPENDENT single-job chains over
+    # the same input — overlapped from a 2-thread pool so one job's tail
+    # back-fills the other's idle executors (guide §2.6, the percolation
+    # pattern; r15).
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_sim = pool.submit(
             inheritable_thread_target(
-                lambda: _micro_sims(vectors, cents, id_col, vec_col)
+                lambda: _micro_sims(
+                    vectors, cents, id_col, vec_col
+                ).localCheckpoint()
             )
         )
         f_pex = pool.submit(

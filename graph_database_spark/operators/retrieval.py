@@ -465,8 +465,8 @@ def hybrid_rrf_search(
     scores sum ``1/(rrf_k + rank)`` across the lists.
 
     Legs: the lexical side is bm25_search unchanged; the dense side
-    embeds the corpus AND the query with the md5 hash-trick twin
-    (text.hash_embedding_md5 — integer vectors, cross-engine exact) and
+    embeds the corpus AND the query with the md5 hashing trick
+    (text.hash_embedding — integer vectors, cross-engine exact) and
     ranks by exact cosine, so the ENTIRE hybrid pipeline stays
     oracle-checkable. Per-leg RRF contributions are snapped to integer
     micro-units before summing, making fusion order-exact: ranks are
@@ -479,7 +479,7 @@ def hybrid_rrf_search(
     joins two <= leg_k-row frames — driver-free, broadcast-trivial."""
     from graph_database_spark.functions.vectors import l2_norm
     from graph_database_spark.operators.similarity import brute_force_topk
-    from graph_database_spark.operators.text import hash_embedding_md5
+    from graph_database_spark.operators.text import hash_embedding
 
     lex = bm25_search(docs, query_terms, top=leg_k).select(
         "doc_id", F.col("rank").alias("r_lex")
@@ -487,18 +487,18 @@ def hybrid_rrf_search(
     # Zero-norm vectors (every token's sign cancelled) would make cosine
     # NaN and Spark sorts NaN first — excluded on both sides.
     # The producer checkpoints BEFORE the norm filter (r15: moved inside
-    # hash_embedding_md5): the filter and the two downstream norm/dot
+    # hash_embedding): the filter and the two downstream norm/dot
     # evaluations otherwise each re-derive the full per-token md5 fold
     # (CollapseProject substitutes the embedding expression into every
     # reference — 6 copies in the r14 executed plan; in-session A/B:
     # 11.3 -> 3.4 s at sf0.1, rows identical).
-    dvec = hash_embedding_md5(docs, dim=dim).where(
+    dvec = hash_embedding(docs, dim=dim).where(
         l2_norm(F.col("embedding")) > 0
     )
     qdf = docs.sparkSession.createDataFrame(
         [(-1, " ".join(query_terms))], "doc_id long, text string"
     )
-    qvec = hash_embedding_md5(qdf, dim=dim, materialize=False)
+    qvec = hash_embedding(qdf, dim=dim, materialize=False)
     dense = brute_force_topk(
         qvec, dvec, k=leg_k, id_col="doc_id", max_broadcast_rows=None
     ).select(F.col("cand_id").alias("doc_id"), F.col("rank").alias("r_dense"))

@@ -36,7 +36,6 @@ __all__ = [
     "readability",
     "fingerprints",
     "hash_embedding",
-    "hash_embedding_md5",
     "doc_chunks",
     "repetition_stats",
     "common_ngrams",
@@ -192,75 +191,23 @@ def hash_embedding(
     dim: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
+    materialize: bool = True,
 ) -> DataFrame:
     """Feature-hashing text embedding: ``(doc_id, embedding ARRAY<DOUBLE>)``.
 
     The hashing trick (Weinberger et al. 2009): every token adds ±1 to
-    bucket xxhash64(token) % dim, sign from a second hash bit; the
-    result is L2-normalized. Deterministic, vocabulary-free, one
-    aggregate pass per row — the cheap featurizer that makes the
-    similarity operators (brute_force_topk / lsh_topk /
-    cosine_pairs_above) applicable to raw text at any scale.
-    """
-    from graph_database_spark.functions.textnorm import tokens
-    from graph_database_spark.functions.vectors import l2_norm
-    from graph_database_spark.operators.spread import spread
-
-    # Hashes are computed ONCE per token into (bucket, sign) structs —
-    # referencing the hash expressions inside the per-slot lambda would
-    # re-evaluate them dim times per token (the HOF capture trap,
-    # _shingles_from docstring in dedup.py).
-    pairs = F.transform(
-        tokens(F.col(text_col)),
-        lambda t: F.struct(
-            F.pmod(F.xxhash64(t), F.lit(dim)).alias("b"),
-            (F.xxhash64(F.lit(1), t).bitwiseAND(F.lit(1)) * 2 - 1)
-            .cast("double")
-            .alias("s"),
-        ),
-    )
-    raw = F.aggregate(
-        pairs,
-        F.array_repeat(F.lit(0.0), dim),
-        lambda acc, p: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: F.when(i == p["b"], p["s"]).otherwise(F.lit(0.0)),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # raw and its norm are materialized before the divide so the final
-    # per-element lambda references plain columns, not expression trees.
-    raw_df = (
-        spread(docs)
-        .select(F.col(id_col), raw.alias("raw"))
-        .withColumn("nrm", F.greatest(l2_norm(F.col("raw")), F.lit(1e-12)))
-        .localCheckpoint()
-    )
-    return raw_df.select(
-        id_col,
-        F.transform("raw", lambda x: x / F.col("nrm")).alias("embedding"),
-    )
-
-
-def hash_embedding_md5(
-    docs: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    materialize: bool = True,
-) -> DataFrame:
-    """Hash-verifiable twin of ``hash_embedding`` (the md5-twin
-    philosophy): bucket and sign from md5 (oracle-reproducible in SQL),
-    and the vector is the RAW ±1 count histogram — INTEGER-valued, no
+    bucket md5(token) % dim, sign from a second md5 — deterministic,
+    vocabulary-free, one HOF pass per row, no shuffle: the cheap
+    featurizer that makes the similarity operators (brute_force_topk /
+    lsh_topk / cosine_pairs_above) applicable to raw text at any scale.
+    The vector is the RAW ±1 count histogram — INTEGER-valued, no
     normalization. Cosine is scale-invariant, so downstream similarity
-    over these vectors equals the normalized form's, while every
-    coordinate is an order-independent integer sum: dot products are
-    exact, norms are IEEE sqrt of exact integers — the whole
-    featurize-then-match composition becomes cross-engine checkable.
-    Same plan shape as hash_embedding (one HOF pass, no shuffle).
+    equals the normalized form's, while every coordinate is an
+    order-independent integer sum: dot products are exact, norms are
+    IEEE sqrt of exact integers — the whole featurize-then-match
+    composition is cross-engine checkable (md5 is oracle-reproducible
+    in SQL). A document whose signs all cancel gets the zero vector;
+    callers computing cosine filter it out (0/0 is NaN).
 
     ``materialize`` (r15, VERDICT r14 #5): the per-token md5 fold is
     checkpointed INSIDE the producer — CollapseProject otherwise

@@ -292,8 +292,13 @@ def probe_ivf_index(
     pairs exactly as ivf_topk does. Raises ValueError on a manifest of
     another kind or centroid family (see ``_load_ivf_manifest``)."""
     m = _load_ivf_manifest(path)
+    # Checkpointed so the probe plan keeps its two Exchanges (query side
+    # onto the cell buckets, top-k window): the lazy query cells would
+    # carry the kernel's round-robin spread into it.
     return _rerank_topk(
-        _query_cells(queries, m["centroids"], n_probe, id_col, vec_col),
+        _query_cells(
+            queries, m["centroids"], n_probe, id_col, vec_col
+        ).localCheckpoint(),
         spark.table(m["table"]),
         k,
     )
@@ -493,8 +498,7 @@ def append_ivfpq_index(
         )
     spark = new_vectors.sparkSession
     cmn, codebook = _ivfpq_model_frames(spark, m)
-    simmed = _micro_sims(new_vectors, m["cents"], id_col, vec_col)
-    cell_of = simmed.select(
+    cell_of = _micro_sims(new_vectors, m["cents"], id_col, vec_col).select(
         F.col("vid").alias("vec_id"), _best_cell().alias("cell")
     ).localCheckpoint()
     nex = _explode_micro(
@@ -546,8 +550,10 @@ def probe_ivfpq_index(
             f"index at {path} is kind={m.get('kind')!r}, not ivfpq"
         )
     cmn, codebook = _ivfpq_model_frames(spark, m)
+    # probe feeds both the candidate pairs and the lookup tables.
     probe = _probe_cells(
-        _micro_sims(queries, m["cents"], id_col, vec_col), n_probe
+        _micro_sims(queries, m["cents"], id_col, vec_col).localCheckpoint(),
+        n_probe,
     )
     q_pex = _explode_micro(
         queries, m["sub_dims"], id_col, vec_col

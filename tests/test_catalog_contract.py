@@ -25,7 +25,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_rows_only_set_only_shrinks():
     # A query is rows-only exactly when it has no ORACLES entry, so a new
     # query added without an oracle grows this set and fails here by name.
-    assert len(catalog.ROWS_ONLY) <= 10, (
+    assert len(catalog.ROWS_ONLY) <= 6, (
         f"rows-only set grew to {len(catalog.ROWS_ONLY)}: {sorted(catalog.ROWS_ONLY)}"
     )
 

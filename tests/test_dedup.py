@@ -122,17 +122,29 @@ def test_staged_dedup_pipeline(docs, spark):
 
 
 def test_hash_embedding_properties(docs, spark):
-    """Hash-trick embeddings: unit norm, deterministic, and cosine
-    reflects textual similarity (near-dups ~1, unrelated much lower)."""
+    """Hash-trick embeddings: integer ±1 count histograms, deterministic,
+    and cosine reflects textual similarity (near-dups ~1, unrelated much
+    lower)."""
+    from pyspark.sql import functions as F
+
+    from graph_database_spark.functions.textnorm import tokens
     from graph_database_spark.operators.text import hash_embedding
     from graph_database_spark.operators.similarity import cosine_pairs_above
 
     emb = hash_embedding(docs, dim=64)
     rows = {r["doc_id"]: r["embedding"] for r in emb.collect()}
+    n_tok = {
+        r["doc_id"]: r["n"]
+        for r in docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n"))
+        .collect()
+    }
     assert all(len(v) == 64 for v in rows.values())
-    import math
-    for v in rows.values():
-        assert math.isclose(sum(x * x for x in v), 1.0, rel_tol=1e-6)
+    for d, v in rows.items():
+        # Each token adds ±1 to one bucket: integer coordinates whose
+        # absolute sum is at most the token count, with the same parity.
+        assert all(x == int(x) for x in v)
+        mass = int(sum(abs(x) for x in v))
+        assert mass <= n_tok[d] and (n_tok[d] - mass) % 2 == 0, (d, mass)
     assert rows[1] == rows[2]  # identical text -> identical embedding
 
     sims = {(r["id_a"], r["id_b"]): r["sim"]

@@ -3,52 +3,143 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from graph_database_spark.operators.kcore import k_core
 from graph_database_spark.operators.pagerank import pagerank
 
 
-def numpy_pagerank(edges, damping, iters):
-    """Dense power iteration on the symmetrized graph — the oracle."""
+def _dense(edges, weights, sources, mass, dtype):
+    """Symmetrized dense adjacency (edge weights, default 1) and the
+    teleport vector: ``mass`` spread uniformly, or over ``sources``."""
     nodes = sorted({v for e in edges for v in e})
     idx = {v: i for i, v in enumerate(nodes)}
     n = len(nodes)
-    adj = np.zeros((n, n))
-    for a, b in edges:
-        adj[idx[a], idx[b]] = adj[idx[b], idx[a]] = 1.0
-    deg = adj.sum(axis=1)
-    r = np.full(n, 1.0 / n)
+    adj = np.zeros((n, n), dtype=dtype)
+    for j, (a, b) in enumerate(edges):
+        w = 1 if weights is None else weights[j]
+        adj[idx[a], idx[b]] = adj[idx[b], idx[a]] = w
+    pref = np.zeros(n)
+    if sources is None:
+        pref[:] = mass / n
+    else:
+        for s in sources:
+            pref[idx[s]] = mass / len(sources)
+    return nodes, idx, adj, pref
+
+
+def numpy_ppr(edges, damping, iters, weights=None, sources=None):
+    """Float power iteration on the symmetrized graph — the oracle for
+    classic, weighted and personalized PageRank."""
+    nodes, idx, adj, pref = _dense(edges, weights, sources, 1.0, np.float64)
+    strength = adj.sum(axis=1)
+    r = pref.copy()
     for _ in range(iters):
-        r = (1 - damping) / n + damping * adj.T @ (r / deg)
+        r = (1 - damping) * pref + damping * adj.T @ (r / strength)
     return {v: r[idx[v]] for v in nodes}
 
 
+def _half_up(x):
+    """Spark's round(x, 0) on values >= 0 (HALF_UP)."""
+    return np.floor(x + 0.5).astype(np.int64)
+
+
+def nano_rounds(edges, damping, iters, weights=None, sources=None):
+    """Integer mirror of operators.pagerank: the nano-unit rank vector
+    after every round, ``[r0, r1, ..., r_iters]`` as ``{id: int}`` dicts.
+    Same IEEE expressions as the kernel, operand for operand."""
+    nodes, idx, adj, pref = _dense(edges, weights, sources, 1e9, np.int64)
+    deg = adj.sum(axis=1)
+    r = _half_up(pref)
+    out = [r]
+    for _ in range(iters):
+        ratio = _half_up(r.astype(np.float64) / deg.astype(np.float64))
+        m = adj.T @ ratio
+        r = _half_up((1.0 - damping) * pref + damping * m.astype(np.float64))
+        out.append(r)
+    return [{v: int(x[idx[v]]) for v in nodes} for x in out]
+
+
+def drift_bound(edges, damping, iters, weights=None):
+    """L1 bound, in rank units, on |nano/1e9 - float| after ``iters``
+    rounds: r0 rounds each vertex by <= 0.5 nano; every round adds
+    <= 0.5 per ratio times its strength over all messages (damped) and
+    <= 0.5 per vertex on the final round, and the damped walk operator
+    does not grow L1 error."""
+    n = len({v for e in edges for v in e})
+    strength_sum = 2 * (len(edges) if weights is None else sum(weights))
+    per_round = damping * 0.5 * strength_sum + 0.5 * n
+    return (0.5 * n + iters * per_round) * 1e-9
+
+
+def stop_round(rounds, threshold=1000.0):
+    """The first round k >= 1 with max |r_k - r_{k-1}| < threshold, or
+    the last round — the kernel's early-stop rule."""
+    for k in range(1, len(rounds)):
+        d = max(abs(rounds[k][v] - rounds[k - 1][v]) for v in rounds[k])
+        if d < threshold:
+            return k
+    return len(rounds) - 1
+
+
+def _ranks(df):
+    return {r["id"]: r["rank_nano"] for r in df.collect()}
+
+
 EDGES = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (4, 5), (3, 5), (5, 6)]
+WEIGHTS = [3, 1, 2, 5, 1, 4, 2, 1]
 
 
 def test_pagerank_matches_numpy(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
     # tol=0 forces exactly max_iterations rounds on both sides.
-    ours = {r["id"]: r["rank"]
-            for r in pagerank(df, damping=0.85, max_iterations=15, tol=0.0).collect()}
-    ref = numpy_pagerank(EDGES, 0.85, 15)
+    ours = _ranks(pagerank(df, damping=0.85, max_iterations=15, tol=0.0))
+    assert ours == nano_rounds(EDGES, 0.85, 15)[15]
+    ref = numpy_ppr(EDGES, 0.85, 15)
+    bound = drift_bound(EDGES, 0.85, 15)
     assert set(ours) == set(ref)
     for v in ref:
-        assert abs(ours[v] - ref[v]) < 1e-9, (v, ours[v], ref[v])
+        assert abs(ours[v] / 1e9 - ref[v]) < bound, (v, ours[v], ref[v])
 
 
 def test_pagerank_mass_conserved(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
-    total = sum(r["rank"] for r in pagerank(df, max_iterations=10).collect())
-    assert abs(total - 1.0) < 1e-9
+    ranks = _ranks(pagerank(df, max_iterations=10, tol=0.0))
+    assert abs(sum(ranks.values()) / 1e9 - 1.0) < drift_bound(EDGES, 0.85, 10)
 
 
 def test_pagerank_converges_before_budget(spark):
     # Symmetric triangle: uniform ranks from round 1; converges instantly.
-    df = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long")
-    ours = {r["id"]: r["rank"] for r in pagerank(df, max_iterations=50).collect()}
+    tri = [(1, 2), (2, 3), (1, 3)]
+    df = spark.createDataFrame(tri, "src long, dst long")
+    ours = _ranks(pagerank(df, max_iterations=50))
+    rounds = nano_rounds(tri, 0.85, 50)
+    assert stop_round(rounds) == 1
+    assert ours == rounds[1]
     for v in (1, 2, 3):
-        assert abs(ours[v] - 1 / 3) < 1e-9
+        assert abs(ours[v] / 1e9 - 1 / 3) < drift_bound(tri, 0.85, 1)
+
+
+@pytest.mark.parametrize("variant", ["classic", "weighted", "personalized"])
+def test_pagerank_default_tol_stops_at_mirror_round(spark, variant):
+    # The default tol=1e-6 stops at the mirror's first round whose max
+    # |Δ| is below 1000 nano-units — before the 50-round budget — and
+    # returns exactly that round's ranks.
+    weights = WEIGHTS if variant == "weighted" else None
+    sources = [0] if variant == "personalized" else None
+    rows = [(a, b, w) for (a, b), w in zip(EDGES, WEIGHTS)]
+    df = spark.createDataFrame(rows, "src long, dst long, weight long")
+    kwargs = {}
+    if weights:
+        kwargs["weight_col"] = "weight"
+    if sources:
+        kwargs["sources"] = spark.createDataFrame([(0,)], "id long")
+    rounds = nano_rounds(EDGES, 0.85, 50, weights=weights, sources=sources)
+    k = stop_round(rounds)
+    assert k < 50
+    assert _ranks(pagerank(df, max_iterations=50, **kwargs)) == rounds[k]
+    # One round fewer is a different answer, so the stop round matters.
+    assert rounds[k] != rounds[k - 1]
 
 
 def test_kcore_triangle_with_pendant(spark):
@@ -223,56 +314,38 @@ def test_closeness_disconnected(spark):
     assert abs(rows[0]["closeness"] - 1.0) < 1e-9
 
 
-def numpy_ppr(edges, damping, iters, weights=None, sources=None):
-    """Weighted/personalized power iteration — oracle for the variants."""
-    nodes = sorted({v for e in edges for v in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    adj = np.zeros((n, n))
-    for j, (a, b) in enumerate(edges):
-        w = 1.0 if weights is None else weights[j]
-        adj[idx[a], idx[b]] = adj[idx[b], idx[a]] = w
-    strength = adj.sum(axis=1)
-    pref = np.zeros(n)
-    if sources is None:
-        pref[:] = 1.0 / n
-    else:
-        for s in sources:
-            pref[idx[s]] = 1.0 / len(sources)
-    r = pref.copy()
-    for _ in range(iters):
-        r = (1 - damping) * pref + damping * adj.T @ (r / strength)
-    return {v: r[idx[v]] for v in nodes}
-
-
 def test_pagerank_weighted_matches_numpy(spark):
-    weights = [3.0, 1.0, 2.0, 5.0, 1.0, 4.0, 2.0, 1.0]
-    rows = [(a, b, w) for (a, b), w in zip(EDGES, weights)]
-    df = spark.createDataFrame(rows, "src long, dst long, weight double")
-    ours = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            df, max_iterations=15, tol=0.0, weight_col="weight"
-        ).collect()
-    }
-    ref = numpy_ppr(EDGES, 0.85, 15, weights=weights)
+    rows = [(a, b, w) for (a, b), w in zip(EDGES, WEIGHTS)]
+    df = spark.createDataFrame(rows, "src long, dst long, weight long")
+    ours = _ranks(pagerank(df, max_iterations=15, tol=0.0, weight_col="weight"))
+    assert ours == nano_rounds(EDGES, 0.85, 15, weights=WEIGHTS)[15]
+    ref = numpy_ppr(EDGES, 0.85, 15, weights=WEIGHTS)
+    bound = drift_bound(EDGES, 0.85, 15, weights=WEIGHTS)
     for v in ref:
-        assert abs(ours[v] - ref[v]) < 1e-9, (v, ours[v], ref[v])
+        assert abs(ours[v] / 1e9 - ref[v]) < bound, (v, ours[v], ref[v])
+
+
+def test_pagerank_rejects_fractional_weights(spark):
+    # A DOUBLE weight would be truncated by the BIGINT cast (0.5 -> 0,
+    # a zero-strength vertex); the schema check raises before any job.
+    rows = [(a, b, float(w)) for (a, b), w in zip(EDGES, WEIGHTS)]
+    df = spark.createDataFrame(rows, "src long, dst long, weight double")
+    with pytest.raises(ValueError, match="integral"):
+        pagerank(df, weight_col="weight")
 
 
 def test_pagerank_personalized(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
     src = spark.createDataFrame([(0,)], "id long")
-    ours = {
-        r["id"]: r["rank"]
-        for r in pagerank(df, max_iterations=15, tol=0.0, sources=src).collect()
-    }
+    ours = _ranks(pagerank(df, max_iterations=15, tol=0.0, sources=src))
+    assert ours == nano_rounds(EDGES, 0.85, 15, sources=[0])[15]
     ref = numpy_ppr(EDGES, 0.85, 15, sources=[0])
+    bound = drift_bound(EDGES, 0.85, 15)
     for v in ref:
-        assert abs(ours[v] - ref[v]) < 1e-9, (v, ours[v], ref[v])
+        assert abs(ours[v] / 1e9 - ref[v]) < bound, (v, ours[v], ref[v])
     # Seed-adjacent mass dominates: the seed outranks the far end.
     assert ours[0] > ours[6]
-    assert abs(sum(ours.values()) - 1.0) < 1e-9
+    assert abs(sum(ours.values()) / 1e9 - 1.0) < bound
 
 
 def test_ktruss_k4_with_pendant(spark):
@@ -298,23 +371,6 @@ def test_ktruss_cascade(spark):
     assert k_truss(df, k=4).count() == 0
     got3 = {(r["src"], r["dst"]) for r in k_truss(df, k=3).collect()}
     assert got3 == {(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}
-
-
-def test_pagerank_quantized_tracks_float(spark):
-    # Quantization error is ~1e-9/round — nano-ranks must agree with the
-    # floating fixed-iteration variant to ~1e-7 and sum to ~1.0 of mass.
-    from graph_database_spark.operators.pagerank import pagerank_quantized
-
-    df = spark.createDataFrame(EDGES, "src long, dst long")
-    want = numpy_pagerank(EDGES, 0.85, 10)
-    got = {
-        r["id"]: r["rank_nano"] / 1e9
-        for r in pagerank_quantized(df, iterations=10).collect()
-    }
-    assert set(got) == set(want)
-    for v, r in want.items():
-        assert abs(got[v] - r) < 1e-6
-    assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
 def test_link_scores_brute_force(spark):
