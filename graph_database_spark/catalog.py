@@ -33,6 +33,7 @@ from graph_database_spark.operators import temporal as TP
 from graph_database_spark.operators import text as T
 from graph_database_spark.operators.betweenness import betweenness
 from graph_database_spark.operators.hits import hits_quantized
+from graph_database_spark.operators.sketches import md5_hash60
 from graph_database_spark.functions.textnorm import text_fingerprint, tokens
 from graph_database_spark.functions.vectors import l2_norm
 from graph_database_spark.plans.copurchase import copurchase_edges, copurchase_vertices
@@ -312,7 +313,7 @@ def q_dedup_minhash(spark, sf_dir):
 
 
 def q_dedup_simhash(spark, sf_dir):
-    return D.simhash_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
+    return D.simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -620,12 +621,7 @@ def q_ab_test_welch(spark, sf_dir):
         )
         .select(
             (
-                F.conv(
-                    F.md5(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
-                    .substr(1, 15),
-                    16,
-                    10,
-                ).cast("long")
+                md5_hash60(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
                 % 2
             ).alias("arm"),
             "cents",
@@ -2416,12 +2412,7 @@ def q_diff_in_diff(spark, sf_dir):
         .agg(F.sum("cents").alias("cents"))
         .select(
             (
-                F.conv(
-                    F.md5(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
-                    .substr(1, 15),
-                    16,
-                    10,
-                ).cast("long")
+                md5_hash60(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
                 % 2
             ).alias("arm"),
             "period",
@@ -2817,33 +2808,29 @@ def q_top_tokens_per_lang(spark, sf_dir):
 
 
 def q_distinct_users_sketch(spark, sf_dir):
-    # Rows-only: KMV estimates are deterministic but intentionally
-    # approximate, so no value oracle; accuracy (<15% err at k=256) is
-    # pinned by tests/test_sketches_and_sinks.py.
+    # KMV bottom-k distinct users per event type at the default k=256:
+    # every kept hash is md5_hash60, so DuckDB reproduces the sketch and
+    # the estimate (_build_kmv_sql). At sf0.01 each type has 150 < 256
+    # distinct users, so this certifies the exact fallback there and the
+    # sketch path from sf0.1 up; accuracy (<15% err) is pinned by
+    # tests/test_sketches_and_sinks.py.
     from graph_database_spark.operators.sketches import distinct_count_kmv
 
-    return distinct_count_kmv(
+    out = distinct_count_kmv(
         load_table(spark, sf_dir, "events"), "user_id", group_by="event_type"
     )
+    return out.select("event_type", F.round("est_distinct", 4).alias("est_distinct"))
 
 
 def q_distinct_users_kmv(spark, sf_dir):
-    # The md5-twin of distinct_users_sketch: same KMV bottom-k estimator,
-    # hash derived from md5 so DuckDB reproduces every kept hash value
-    # bit-for-bit (60-bit space; window bottom-k in SQL). k=64 < the 150
-    # distinct users per type at sf0.01, so the sketch path (not the
-    # exact fallback) is what the hash match certifies. FP order matches
-    # the oracle: frac = kth/2^60 first, then (k-1)/frac.
-    from graph_database_spark.operators.sketches import distinct_count_kmv, md5_hash60
+    # distinct_users_sketch at k=64 < the 150 distinct users per type at
+    # sf0.01, so the sketch path (not the exact fallback) is what the
+    # hash match certifies at every scale. FP order matches the oracle:
+    # frac = kth/2^60 first, then (k-1)/frac.
+    from graph_database_spark.operators.sketches import distinct_count_kmv
 
     out = distinct_count_kmv(
-        load_table(spark, sf_dir, "events"),
-        "user_id",
-        group_by="event_type",
-        k=64,
-        hash_fn=md5_hash60,
-        lo=0.0,
-        span=2.0**60,
+        load_table(spark, sf_dir, "events"), "user_id", group_by="event_type", k=64
     )
     return out.select("event_type", F.round("est_distinct", 4).alias("est_distinct"))
 
@@ -4289,15 +4276,11 @@ def q_f2_ams(spark, sf_dir):
             "j",
             (
                 (
-                    F.conv(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("ams"), F.col("j").cast("string"), F.col("t")
-                            )
-                        ).substr(1, 15),
-                        16,
-                        10,
-                    ).cast("long")
+                    md5_hash60(
+                        F.concat_ws(
+                            "|", F.lit("ams"), F.col("j").cast("string"), F.col("t")
+                        )
+                    )
                     % 2
                 )
                 * 2
@@ -4336,12 +4319,7 @@ def q_sprt_monitor(spark, sf_dir):
         "t0",
         "succ",
         (
-            F.conv(
-                F.md5(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
-                .substr(1, 15),
-                16,
-                10,
-            ).cast("long")
+            md5_hash60(F.concat(F.lit("ab|"), F.col("user_id").cast("string")))
             % 2
         ).alias("arm"),
     )
@@ -4502,9 +4480,10 @@ def q_embedding_quantize(spark, sf_dir):
 
 
 def q_simhash_signatures(spark, sf_dir):
-    # Cross-engine SimHash verification (md5 bit votes) — pins the
-    # sign-sum math like minhash_signatures pins the min-hash math.
-    return D.simhash_signatures_md5(load_table(spark, sf_dir, "documents"))
+    # The 60-bit md5 SimHash of every document (the signatures
+    # dedup_simhash bands) — pins the sign-sum math like
+    # minhash_signatures pins the min-hash math.
+    return D.simhash_signatures(load_table(spark, sf_dir, "documents"))
 
 
 def q_embedding_pca(spark, sf_dir):
@@ -6333,16 +6312,9 @@ def q_link_negative_samples(spark, sf_dir):
             "id",
             "j",
             (
-                F.conv(
-                    F.md5(
-                        F.concat(
-                            F.col("id").cast("string"), F.lit("|"), F.col("j")
-                        )
-                    ).substr(1, 15),
-                    16,
-                    10,
+                md5_hash60(
+                    F.concat(F.col("id").cast("string"), F.lit("|"), F.col("j"))
                 )
-                .cast("long")
                 % F.lit(n)
                 + 1
             ).alias("pr"),
@@ -8230,7 +8202,11 @@ def _build_token_packing_sql() -> str:
     """
 
 
-ORACLES["distinct_users_kmv"] = """
+def _build_kmv_sql(k: int) -> str:
+    """Oracle of ``distinct_count_kmv(events, "user_id", "event_type",
+    k)`` rounded to 4 places: the k-th smallest md5-60 hash per type
+    (window bottom-k), or the exact count below k distinct users."""
+    return f"""
 WITH h AS (
   SELECT DISTINCT event_type,
          CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
@@ -8242,12 +8218,16 @@ WITH h AS (
   FROM h
 )
 SELECT event_type,
-       round(CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-                  ELSE 63.0 / ((CAST(hv AS DOUBLE) - 0.0) / 1152921504606846976.0)
+       round(CASE WHEN nd < {k} THEN CAST(nd AS DOUBLE)
+                  ELSE {k - 1}.0 / (CAST(hv AS DOUBLE) / 1152921504606846976.0)
              END, 4) AS est_distinct
 FROM r
-WHERE rn = CASE WHEN nd < 64 THEN nd ELSE 64 END
+WHERE rn = CASE WHEN nd < {k} THEN nd ELSE {k} END
 """
+
+
+ORACLES["distinct_users_kmv"] = _build_kmv_sql(64)
+ORACLES["distinct_users_sketch"] = _build_kmv_sql(256)
 
 ORACLES["distinct_users_hll"] = """
 WITH r AS (
@@ -11302,8 +11282,10 @@ ORACLES["doc_kl_divergence"] = f"""
                  / 1000000.0, 6) AS kl
     FROM scored GROUP BY 1, 2
 """
-ORACLES["simhash_signatures"] = f"""
-    WITH toks AS (
+# dedup.simhash: per token the md5-60 hash, per bit b < 60 the +/-1
+# vote sum, bit b of sh set iff its sum is positive.
+_SIMHASH_CTES = f"""
+    toks AS (
         SELECT doc_id, unnest({_DUCK_TOKENS}) AS tok
         FROM documents
     ),
@@ -11315,13 +11297,27 @@ ORACLES["simhash_signatures"] = f"""
     bitsum AS (
         SELECT doc_id, b,
                sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        FROM h, UNNEST(range(0, 16)) AS u(b)
+        FROM h, UNNEST(range(0, 60)) AS u(b)
         GROUP BY 1, 2
-    )
-    SELECT doc_id,
-           CAST(sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END) AS BIGINT)
-               AS simhash
-    FROM bitsum GROUP BY 1
+    ),
+    sh AS (
+        SELECT doc_id,
+               CAST(sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END) AS BIGINT)
+                   AS sh
+        FROM bitsum GROUP BY 1
+    )"""
+ORACLES["simhash_signatures"] = f"""
+    WITH {_SIMHASH_CTES}
+    SELECT doc_id, sh AS simhash FROM sh
+"""
+# All pairs, not the 4x15-bit banded join: a pair the banding loses
+# would show here as a missing row.
+ORACLES["dedup_simhash"] = f"""
+    WITH {_SIMHASH_CTES}
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           bit_count(xor(a.sh, b.sh)) AS hamming
+    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.sh, b.sh)) <= 3
 """
 ORACLES["decontamination"] = f"""
     WITH toks AS (
@@ -14088,10 +14084,7 @@ def q_join_cardinality(spark, sf_dir):
     span = 1152921504606846976.0  # 2^60
 
     def side(df, col):
-        h = F.conv(
-            F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        d = df.select(h.alias("h")).distinct()
+        d = df.select(md5_hash60(F.col(col)).alias("h")).distinct()
         kk = d.orderBy("h").limit(K).localCheckpoint()
         stats = kk.agg(
             F.max("h").alias("kth"), F.count("*").alias("nk")

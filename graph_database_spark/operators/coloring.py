@@ -49,13 +49,14 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graph_database_spark.operators.fixpoint import materialize, state_partitions
+from graph_database_spark.operators.sketches import md5_hash60
 from graph_database_spark.plans.copurchase import symmetrize
 
 __all__ = ["graph_coloring"]
 
 
 def _priority(col):
-    return F.conv(F.md5(F.concat(F.lit("jp|"), col.cast("string"))).substr(1, 15), 16, 10).cast("long")
+    return md5_hash60(F.concat(F.lit("jp|"), col.cast("string")))
 
 
 def graph_coloring(edges: DataFrame, max_iterations: int = 24) -> DataFrame:

@@ -4,7 +4,7 @@ Five tiers, in increasing fuzziness:
   exact_dedup         hash-groupBy on the raw text          (oracle: yes)
   normalized_dedup    md5 of normalized text                (oracle: yes)
   minhash_lsh_pairs   md5 MinHash + banded LSH pairs        (oracle: yes)
-  simhash_pairs       64-bit SimHash + banded hamming pairs (rows-only)
+  simhash_pairs       md5 60-bit SimHash + banded hamming pairs (oracle: yes)
   ngram_jaccard_pairs exact Jaccard on LSH candidates       (oracle: yes)
 
 Scale posture: every tier is one or two shuffles.
@@ -16,9 +16,9 @@ Scale posture: every tier is one or two shuffles.
     buckets. Bucket sizes are bounded by collision probability, so the
     pair join never degenerates; at 100 TB the band shuffle is the only
     wide stage and it is uniformly keyed by hash.
-  - SimHash: signature per-row (64 aggregate expressions over the token
-    hash array, all codegen'd), banded into 4x16-bit chunks for the
-    candidate join, exact hamming <= k filter via xor + bit_count.
+  - SimHash: signature per-row (60 aggregate expressions over the md5
+    token hash array, all codegen'd), banded into 4x15-bit chunks for
+    the candidate join, exact hamming <= 3 filter via xor + bit_count.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from graph_database_spark.functions.textnorm import normalize_text, text_fingerprint, tokens
+from graph_database_spark.operators.sketches import md5_hash60
 from graph_database_spark.operators.spread import spread
 
 __all__ = [
@@ -128,10 +129,7 @@ def _md5_sig(toks: DataFrame, n_hashes: int, shingle_k: int) -> DataFrame:
         # every j, correlating signature positions and inflating the
         # Jaccard estimate ~30x in false-positive pairs.)
         return F.array(*[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{j}|"), s)), 1, 15), 16, 10
-            ).cast("long")
-            for j in range(n_hashes)
+            md5_hash60(F.concat(F.lit(f"{j}|"), s)) for j in range(n_hashes)
         ])
 
     return toks.select(
@@ -354,7 +352,7 @@ def minhash_lsh_pairs(
     MATH, ``ngram_jaccard_exact`` the true PAIR SET, and
     ``dedup_minhash`` (16 x 8) / ``dedup_minhash_md5`` (16 x 4) this
     BANDING + estimator. 16 hashes in 8 bands of 2 rows finds the same
-    pairs at sf0.01 and sf0.1 as the 64 x 16 xxhash64 leg it replaced
+    pairs at sf0.01 and sf0.1 as the 64 x 16 configuration it replaced
     (SCALE.md "One MinHash family").
 
     Plan (the SCALE.md payload rule applied): tokens and signatures
@@ -413,10 +411,7 @@ def winnow_fingerprints(
     sh = _shingles_from(F.col("toks"), k)
     # Hash each shingle ONCE into a materialized column (HOF capture
     # rule); 60-bit md5 prefix — the minhash oracle family.
-    hashes = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
+    hashes = F.transform(sh, md5_hash60)
     hdf = toks_df.select(F.col("id").alias(id_col), hashes.alias("h"))
     n = F.size("h")
     w = F.least(F.lit(window), n)  # short docs: one window over all
@@ -445,41 +440,46 @@ def winnow_fingerprints(
     )
 
 
-def simhash(text_col, bits: int = 64) -> Column:
-    """64-bit SimHash of the token multiset, as BIGINT.
+_SIMHASH_BITS = 60
 
-    bit i of the result = 1 iff sum over tokens of (2*bit_i(xxhash64(tok))-1)
+
+def simhash(text_col) -> Column:
+    """60-bit SimHash of the token multiset, as BIGINT.
+
+    bit i of the result = 1 iff sum over tokens of (2*bit_i(md5_hash60(tok))-1)
     is positive. Single pass over the token array (``_simhash_fold``) —
-    row-local, shuffle-free, all codegen'd.
+    row-local, shuffle-free, all codegen'd. 60 bits because the md5 token
+    hash has 60: every bit votes, none is constant, and DuckDB replays
+    the hash (the ``simhash_signatures`` and ``dedup_simhash`` oracles).
     """
-    return _simhash_fold(F.transform(tokens(text_col), lambda t: F.xxhash64(t)), bits)
+    return _simhash_fold(F.transform(tokens(text_col), md5_hash60))
 
 
-def _simhash_fold(hashes: Column, bits: int) -> Column:
-    """SimHash bit vote over an array of BIGINT token hashes: bit i of the
-    result = 1 iff sum over the hashes of (2*bit_i(h)-1) is positive.
+def _simhash_fold(hashes: Column) -> Column:
+    """SimHash bit vote over an array of 60-bit token hashes: bit i of
+    the result = 1 iff sum over the hashes of (2*bit_i(h)-1) is positive.
 
-    One `bits`-slot counter array updated with zip_with, then one mask-sum
-    assembly. Bit tests use plain-int literal masks captured by closure;
-    bit 63 is the two's-complement sign (`1 << 63` is no BIGINT literal).
+    One 60-slot counter array updated with zip_with, then one mask-sum
+    assembly. Bit tests use plain-int literal masks captured by closure:
     F.shiftright inside a HOF lambda requires a Python-int shift amount,
     and multi-parameter lambdas are reserved for the HOF binder's
     (element, index) convention.
     """
 
     def _bit_vec(h: Column) -> Column:
-        terms = []
-        for i in range(bits):
-            cond = (h < 0) if i == 63 else (h.bitwiseAND(F.lit(1 << i)) != 0)
-            terms.append(F.when(cond, 1).otherwise(-1))
-        return F.array(*terms)
+        return F.array(*[
+            F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)
+            for i in range(_SIMHASH_BITS)
+        ])
 
     sums = F.aggregate(
         hashes,
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), _SIMHASH_BITS),
         lambda acc, h: F.zip_with(acc, _bit_vec(h), lambda a, b: a + b),
     )
-    masks = F.array(*[F.shiftleft(F.lit(1).cast("long"), i) for i in range(bits)])
+    masks = F.array(
+        *[F.shiftleft(F.lit(1).cast("long"), i) for i in range(_SIMHASH_BITS)]
+    )
     signed = F.zip_with(sums, masks, lambda s, m: F.when(s > 0, m).otherwise(F.lit(0).cast("long")))
     return F.aggregate(signed, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
@@ -619,43 +619,27 @@ def contamination_bloom(
     )
 
 
-def simhash_signatures_md5(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
+def simhash_signatures(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Cross-engine-checkable SimHash: ``(doc_id, simhash)`` with the
-    per-token hash = first 60 bits of md5 — the verification twin of
-    ``simhash``: any engine reproduces it, so the catalog query pins the
-    bit-vote math (sign of the per-bit +/-1 sum over the token
-    MULTISET) against DuckDB. 16 bits keeps the oracle tractable; the
-    production simhash stays 64-bit xxhash64.
-
-    Same row-local single-pass shape as ``simhash``: a bits-slot
-    counter array folded over the materialized token column, then one
-    mask-sum assembly — nothing leaves the JVM, one groupBy-free map.
-    """
-    t = _tokens_df(docs, text_col, id_col)
-    hashes = F.transform(
-        F.col("toks"),
-        lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"),
+    """``(doc_id, simhash)``: the ``simhash`` of every document, one
+    row-local map. The catalog query pins the bit-vote math (sign of the
+    per-bit +/-1 sum over the token MULTISET) against DuckDB."""
+    return spread(docs).select(
+        F.col(id_col), simhash(F.col(text_col)).alias("simhash")
     )
-    sig = _simhash_fold(hashes, bits)
-    return t.select(F.col("id").alias(id_col), sig.alias("simhash"))
 
 
 def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: ``(id_a, id_b, hamming)``.
+    """Near-dup pairs by SimHash: ``(id_a, id_b, hamming)``, hamming <= 3.
 
-    Candidate generation bands the 64-bit hash into 4 chunks of 16 bits —
+    Candidate generation bands the 60-bit hash into 4 chunks of 15 bits —
     any pair with hamming <= 3 agrees on >= 1 chunk (pigeonhole), so the
-    banded join loses nothing while avoiding the quadratic scan."""
+    banded join loses nothing while avoiding the quadratic scan. The bound
+    is fixed at 3 because 4 chunks guarantee no more: a hamming-4 pair
+    may differ in every chunk."""
     # Materialized once — both sides of the chunk self-join reuse it.
     sh = spread(docs).select(
         F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh")
@@ -666,7 +650,7 @@ def simhash_pairs(
         F.explode(
             F.array(*[
                 F.struct(F.lit(c).alias("chunk"),
-                         F.shiftrightunsigned("sh", 16 * c).bitwiseAND(F.lit(0xFFFF)).alias("val"))
+                         F.shiftright("sh", 15 * c).bitwiseAND(F.lit(0x7FFF)).alias("val"))
                 for c in range(4)
             ])
         ).alias("cc"),
@@ -689,7 +673,7 @@ def simhash_pairs(
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return cand.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= 3
     )
 
 
@@ -1055,12 +1039,9 @@ def duplicate_span_coverage(
                     F.sequence(F.lit(1), F.size("t") - (n - 1)),
                     lambda i: F.struct(
                         i.alias("i"),
-                        F.conv(
-                            F.md5(F.array_join(F.slice(F.col("t"), i, n), " ")
-                                  ).substr(1, 15),
-                            16,
-                            10,
-                        ).cast("long").alias("h"),
+                        md5_hash60(
+                            F.array_join(F.slice(F.col("t"), i, n), " ")
+                        ).alias("h"),
                     ),
                 )
             ).alias("s"),

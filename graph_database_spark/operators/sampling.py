@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_database_spark.operators.sketches import md5_hash60
+
 __all__ = [
     "hash_sample",
     "stratified_cap",
@@ -157,7 +159,7 @@ def weighted_sample_es(
     defined for positive weights. The oracle mirrors the predicate."""
     df = df.where(F.col(weight_col) > 0)
     u = (
-        (F.conv(_hash_hex(id_col).substr(1, 15), 16, 10).cast("long") + 1)
+        (md5_hash60(F.col(id_col)) + 1)
         .cast("double")
         / F.lit(1152921504606846976.0)  # 2^60
     )

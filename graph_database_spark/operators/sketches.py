@@ -4,15 +4,15 @@ Spark's approx_count_distinct (HyperLogLog++) is the default choice, but
 its estimates are engine-internal and not reproducible across engines —
 useless for an oracle-checked pipeline contract. The KMV (k minimum
 values) sketch is fully deterministic given the hash: keep the k
-smallest xxhash64 values of the key; the k-th smallest value's position
-in the hash space estimates the distinct count as
+smallest 60-bit md5 hashes of the key (``md5_hash60``, which DuckDB
+replays); the k-th smallest value's position in the hash space
+estimates the distinct count as
 
-    D ≈ (k - 1) * 2^64 / (max_kept - LONG_MIN)
+    D ≈ (k - 1) * 2^60 / kth
 
-(using the unsigned view of the signed 64-bit hash space). Accuracy is
-~1/sqrt(k). Sketches MERGE: union the kept values, keep the k smallest —
-so partial sketches combine associatively, which is exactly what a
-map-side-combinable aggregate needs.
+Accuracy is ~1/sqrt(k). Sketches MERGE: union the kept values, keep the
+k smallest — so partial sketches combine associatively, which is
+exactly what a map-side-combinable aggregate needs.
 
 Memory bound: ``slice(sort_array(collect_set(...)), 1, k)`` alone
 accumulates ALL distinct hashes per group before truncating — O(D)
@@ -29,53 +29,33 @@ and is what the oracle-checkable contract allows.)
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "mg_merge",
     "mg_batch_summary",
-    "kmv_sketch",
     "kmv_estimate",
     "distinct_count_kmv",
     "md5_hash60",
     "hll_distinct",
 ]
 
-_SPAN = float(2**64)
-_LO = float(-(2**63))
-_SPAN60 = float(2**60)
-
-
 def md5_hash60(col: Column) -> Column:
-    """60-bit nonnegative hash derived from md5 — the cross-engine twin
-    of xxhash64 (DuckDB: ``CAST(('0x' || substring(md5(x),1,15)) AS
-    BIGINT)``). Use as ``hash_fn`` with ``lo=0.0, span=2.0**60`` to make
-    a KMV sketch oracle-checkable."""
+    """60-bit nonnegative hash: the first 15 hex digits of md5(col) read
+    as a BIGINT. The one cross-engine hash of the Column API (DuckDB:
+    ``CAST(('0x' || substring(md5(x), 1, 15)) AS BIGINT)``); 15 digits,
+    not 16, because a 16-digit read overflows BIGINT for about half of
+    all inputs."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def kmv_sketch(key: Column, k: int = 256) -> Column:
-    """ARRAY<BIGINT>: the k smallest xxhash64(key) values (signed order —
-    signed and unsigned order agree up to rotation, and the estimator
-    below accounts for the signed origin). Single-level: state is
-    O(distinct-per-group); use distinct_count_kmv for the bounded
-    two-level aggregation."""
-    return F.slice(F.sort_array(F.collect_set(F.xxhash64(key))), 1, k)
-
-
-def kmv_estimate(
-    sketch: Column, k: int = 256, lo: float = _LO, span: float = _SPAN
-) -> Column:
-    """Distinct-count estimate from a KMV sketch column (DOUBLE).
-
-    ``lo``/``span`` describe the hash range (default: signed 64-bit
-    xxhash64 space). Falls back to the exact size when fewer than k
-    distinct values were seen (the sketch IS the distinct set then)."""
+def kmv_estimate(sketch: Column, k: int = 256) -> Column:
+    """Distinct-count estimate from a KMV sketch of ``md5_hash60``
+    values (DOUBLE): ``(k - 1) / (kth / 2^60)``. Falls back to the exact
+    size when fewer than k distinct values were seen (the sketch IS the
+    distinct set then)."""
     n = F.size(sketch)
-    kth = F.element_at(sketch, k).cast("double")
-    frac = (kth - lo) / F.lit(span)
+    frac = F.element_at(sketch, k).cast("double") / F.lit(float(2**60))
     return F.when(n < k, n.cast("double")).otherwise((k - 1) / frac)
 
 
@@ -85,23 +65,16 @@ def distinct_count_kmv(
     group_by: str | None = None,
     k: int = 256,
     salt_buckets: int = 64,
-    hash_fn: Callable[[Column], Column] = F.xxhash64,
-    lo: float = _LO,
-    span: float = _SPAN,
 ) -> DataFrame:
     """``(group?, est_distinct DOUBLE)`` — sketched distinct counts via
     the bounded two-level aggregation (see module docstring).
 
-    Level 1 groups by (group, xxhash64(key) mod S) and keeps each
+    Level 1 groups by (group, md5_hash60(key) mod S) and keeps each
     bucket's bottom-k; level 2 merges the S partial sketches per group.
-    Identical estimate to the single-level sketch: the global bottom-k of
+    Identical estimate to a single-level sketch: the global bottom-k of
     a set equals the bottom-k of the union of per-bucket bottom-k's (each
-    bucket keeps at least its members of the global bottom-k).
-
-    ``hash_fn``/``lo``/``span`` default to xxhash64 over its signed
-    space; pass ``md5_hash60, lo=0.0, span=2.0**60`` for the
-    cross-engine-checkable md5 twin."""
-    h = hash_fn(F.col(key))
+    bucket keeps at least its members of the global bottom-k)."""
+    h = md5_hash60(F.col(key))
     groups = [group_by] if group_by is not None else []
     partial = (
         df.select(*groups, h.alias("_h"), F.pmod(h, F.lit(salt_buckets)).alias("_salt"))
@@ -110,7 +83,7 @@ def distinct_count_kmv(
     )
     merged = partial.select(*groups, F.explode("_part").alias("_h"))
     agg = kmv_estimate(
-        F.slice(F.sort_array(F.collect_set("_h")), 1, k), k, lo=lo, span=span
+        F.slice(F.sort_array(F.collect_set("_h")), 1, k), k
     ).alias("est_distinct")
     if group_by is None:
         return merged.agg(agg)

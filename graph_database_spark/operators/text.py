@@ -16,6 +16,7 @@ from graph_database_spark.functions.textnorm import (
     text_fingerprint,
     tokens,
 )
+from graph_database_spark.operators.sketches import md5_hash60
 
 # Tiny per-language stopword marker lists for the n-gram/stopword language
 # heuristic. Priority order breaks score ties deterministically.
@@ -224,10 +225,7 @@ def hash_embedding(
     pairs = F.transform(
         tokens(F.col(text_col)),
         lambda t: F.struct(
-            F.pmod(
-                F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-                F.lit(dim),
-            ).alias("b"),
+            F.pmod(md5_hash60(t), F.lit(dim)).alias("b"),
             (
                 (
                     F.conv(

@@ -92,6 +92,31 @@ def test_minhash_lsh_finds_planted_pairs(docs):
     assert not any(4 in p for p in pairs)
 
 
+def _py_simhash(text):
+    """Python reference of dedup.simhash: per token the 60-bit md5 hash
+    int(md5(tok)[:15], 16); bit i set iff the +/-1 votes of bit i over
+    the token multiset sum to a positive number."""
+    toks = [t for t in re.sub(r"[^a-z0-9 ]", "", text.lower()).split(" ") if t]
+    hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+    return sum(
+        1 << i for i in range(60) if sum(1 if h >> i & 1 else -1 for h in hs) > 0
+    )
+
+
+def test_simhash_signatures_match_python_md5(docs, spark):
+    """The 60-bit bit-vote fold equals a hashlib reference on every
+    fixture doc, a 1-token doc (its signature is its token's hash) and
+    an empty doc (no votes: 0)."""
+    extra = [(6, "Hello"), (7, "!!!")]
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in D.simhash_signatures(
+            docs.unionByName(spark.createDataFrame(extra, "doc_id long, text string"))
+        ).collect()
+    }
+    assert got == {d: _py_simhash(t) for d, t in DOCS + extra}
+
+
 def test_simhash_pairs_find_near_dups(docs):
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
              for r in D.simhash_pairs(docs).collect()}

@@ -115,3 +115,26 @@ def test_lsh_pairs_above_recall(emb):
     assert approx <= exact  # in-bucket verify is exact: no false positives
     recall = len(approx & exact) / max(len(exact), 1)
     assert recall >= 0.5, f"pair recall = {recall:.3f}"
+
+
+def test_lsh_all_identical_vectors(spark):
+    """40 identical vectors share one (table, bucket) cell per table:
+    the degenerate full cell of _np_bucket_dots. Every one of the
+    C(40, 2) pairs comes back exactly once, and each query gets its k
+    neighbours (ties on sim break by cand_id) and never itself."""
+    n, k = 40, 5
+    vec = [0.1, -0.2, 0.3, 0.4, -0.5, 0.6, 0.7, -0.8]
+    df = spark.createDataFrame(
+        [(i, vec) for i in range(n)], "vec_id long, embedding array<float>"
+    )
+    pairs = [(r["id_a"], r["id_b"]) for r in S.lsh_pairs_above(df, 0.99).collect()]
+    assert sorted(pairs) == [(a, b) for a in range(n) for b in range(a + 1, n)]
+
+    got = {}
+    for r in S.lsh_topk(df, df, k=k).collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["cand_id"]))
+    want = {
+        q: list(enumerate([c for c in range(n) if c != q][:k], start=1))
+        for q in range(n)
+    }
+    assert {q: sorted(v) for q, v in got.items()} == want

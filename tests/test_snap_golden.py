@@ -11,6 +11,8 @@ table for the eight networks with no golden files.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from graph_database_spark.operators import graph as G
@@ -19,6 +21,10 @@ from graph_database_spark.sources import snap
 
 DATA = snap.REFERENCE_DATA
 GOLD = snap.REFERENCE_OUTPUT
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(DATA), reason=f"reference SNAP data absent: {DATA}"
+)
 
 # SURVEY.md §5.2: (ego, nodes, edges, num, denom) — 0 and 107 are golden,
 # the rest are pinned replication results.
